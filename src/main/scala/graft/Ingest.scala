@@ -73,7 +73,10 @@ object Ingest {
     * executor-side connection per partition — IN ADDITION to the local
     * warehouse, which stays the durable layer carrying the resume
     * markers and rollback machinery the reference delegates to
-    * ReplacingMergeTree. */
+    * ReplacingMergeTree. Both sinks load from one read of the range, so
+    * each block is fetched once; under `--resume` the warehouse fetches
+    * only its incomplete ranges and the server insert reads the whole
+    * range once more. */
   def run(spark: SparkSession, c: Config): Unit = {
     if (c.schema) {
       etl.Load.createTables(spark, c.warehouse)
@@ -90,20 +93,31 @@ object Ingest {
       if (c.resume) {
         val done = etl.Load.ingestResumable(spark, c.from, c.to, c.warehouse, c.endpoint, c.sink)
         System.err.println(s"[ingest] resumed: ${done.size} range(s) ingested")
-      } else etl.Load.ingest(spark, c.from, c.to, c.warehouse, c.endpoint, c.sink)
-      c.clickhouse.foreach { case (host, port) =>
-        etl.Load.tables(spark, c.from, c.to, c.endpoint).foreach {
-          case (name, (df, _, _)) =>
-            // the canonical schema (FixedString widths + nullability)
-            // types the wire blocks so they match the bootstrap DDL —
-            // the flatten casts drop metadata and widen nullability
-            sources.ChTcpLoad.insert(df, host, port, s"ethereum.$name",
-              compress = c.clickhouseLz4,
-              canonical = Some(types.Schemas.tableSchema(name)))
-        }
+        if (c.clickhouse.isDefined)
+          etl.Load.withFetch(spark, c.from, c.to, c.endpoint)(insertClickHouse(_, c))
+      } else etl.Load.withFetch(spark, c.from, c.to, c.endpoint) { fetched =>
+        // one read feeds both sinks
+        etl.Load.land(fetched, c.from, c.to, c.warehouse, c.sink)
+        insertClickHouse(fetched, c)
       }
     }
   }
+
+  /** Streams the four tables of one read into `ethereum.<table>` on the
+    * `--clickhouse` server, if one is given. */
+  private def insertClickHouse(fetched: org.apache.spark.sql.Dataset[etl.BlockWithReceipts],
+      c: Config): Unit =
+    c.clickhouse.foreach { case (host, port) =>
+      etl.Load.tables(fetched).foreach {
+        case (name, (df, _, _)) =>
+          // the canonical schema (FixedString widths + nullability)
+          // types the wire blocks so they match the bootstrap DDL —
+          // the flatten casts drop metadata and widen nullability
+          sources.ChTcpLoad.insert(df, host, port, s"ethereum.$name",
+            compress = c.clickhouseLz4,
+            canonical = Some(types.Schemas.tableSchema(name)))
+      }
+    }
 
   def main(args: Array[String]): Unit = {
     val c = parse(args.toIndexedSeq)

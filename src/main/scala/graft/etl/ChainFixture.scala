@@ -78,6 +78,13 @@ case class RpcBlock(
 /** Block-receipts pair as returned by the second RPC of the ingest loop. */
 case class BlockReceipts(blockNumber: Long, receipts: Seq[RpcReceipt])
 
+/** One block as one read returns it: both RPCs' results in one row.
+  * `number` repeats `block.number` at the top level, where it stays a
+  * non-nullable column (a field read out of the nested, nullable `block`
+  * struct would be nullable), so the flattened tables keep the schemas of
+  * the blocks ⋈ receipts join. */
+case class BlockWithReceipts(number: Long, block: RpcBlock, receipts: Seq[RpcReceipt])
+
 /** Deterministic, partition-parallel synthetic chain source (SURVEY §2 A1-A3).
   *
   * The reference's scan driver is a *sequential* `for i in from..=to` loop

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.types.Schemas
@@ -39,16 +39,41 @@ object Flatten {
       col("timestamp").cast(D).as("timestamp"),
       col("size").cast(D).as("size"))
 
-  /** Blocks ⋈ their receipt arrays on block number (1:1). In production both
-    * arrive from one source read, so this is co-partitioned and cheap. */
+  /** The block's columns of the one-read scan: its fields at the top
+    * level, with `number` taken from the row, where it is non-nullable. */
+  private def blockColumns: Seq[Column] =
+    Encoders.product[RpcBlock].schema.fieldNames.toSeq
+      .map(f => if (f == "number") col("number") else col(s"block.$f"))
+
+  /** The block half of the one-read scan — a projection, no second read. */
+  private[etl] def blocksOf(read: Dataset[BlockWithReceipts]): Dataset[RpcBlock] =
+    read.select(blockColumns: _*).as(Encoders.product[RpcBlock])
+
+  /** The one-read scan in the columns of blocks ⋈ receipts: the block's
+    * columns, then its `receipts` array — both came from one source
+    * read, so no join is needed. */
+  private def withReceipts(read: Dataset[BlockWithReceipts]): DataFrame =
+    read.select(blockColumns :+ col("receipts"): _*)
+
+  /** Blocks ⋈ their receipt arrays on block number (1:1), for callers
+    * holding the two as separate datasets. */
   private def withReceipts(blocks: Dataset[RpcBlock], receipts: Dataset[BlockReceipts]): DataFrame =
     blocks.join(receipts.withColumnRenamed("blockNumber", "number"), Seq("number"))
+
+  /** C1+C2 over the one-read scan ([[transactionRowsOf]]). */
+  def transactionRows(read: Dataset[BlockWithReceipts]): DataFrame =
+    transactionRowsOf(withReceipts(read))
+
+  /** C1+C2 over separately read blocks and receipts: the join, then the
+    * same flatten. */
+  def transactionRows(blocks: Dataset[RpcBlock], receipts: Dataset[BlockReceipts]): DataFrame =
+    transactionRowsOf(withReceipts(blocks, receipts))
 
   /** C1+C2 (fast path): flatten block->transactions with positional index,
     * zip-joined with receipts by array position — the exact semantics of
     * `receipts[transaction_index]` (main.rs:209-254). */
-  def transactionRows(blocks: Dataset[RpcBlock], receipts: Dataset[BlockReceipts]): DataFrame = {
-    val exploded = withReceipts(blocks, receipts).select(
+  private def transactionRowsOf(withReceipts: DataFrame): DataFrame = {
+    val exploded = withReceipts.select(
       col("number"),
       col("hash").as("_blockHash"),
       col("timestamp").as("_blockTimestamp"),
@@ -131,10 +156,19 @@ object Flatten {
         rc.getField("status").as("status"))
   }
 
+  /** C3 over the one-read scan ([[eventRowsOf]]). */
+  def eventRows(read: Dataset[BlockWithReceipts]): DataFrame =
+    eventRowsOf(withReceipts(read))
+
+  /** C3 over separately read blocks and receipts: the join, then the same
+    * flatten. */
+  def eventRows(blocks: Dataset[RpcBlock], receipts: Dataset[BlockReceipts]): DataFrame =
+    eventRowsOf(withReceipts(blocks, receipts))
+
   /** C3: nested flatten receipt->logs (main.rs:256-274). Two-level explode:
     * receipts array, then each receipt's logs array. */
-  def eventRows(blocks: Dataset[RpcBlock], receipts: Dataset[BlockReceipts]): DataFrame =
-    withReceipts(blocks, receipts)
+  private def eventRowsOf(withReceipts: DataFrame): DataFrame =
+    withReceipts
       .select(
         col("number"), col("hash").as("_blockHash"),
         col("timestamp").as("_blockTimestamp"),

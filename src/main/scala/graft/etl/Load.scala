@@ -2,9 +2,11 @@ package graft.etl
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.Failure
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.types.Schemas
 
@@ -40,15 +42,19 @@ object Load {
     sink.write(df, path, sortKeys, numberCol)
 
   /** D3: the 4 table loads of one flush run concurrently (try_join!,
-    * main.rs:293-311); any failure propagates and aborts — same
-    * fail-fast contract, but each write is internally parallel too. */
+    * main.rs:293-311), each write internally parallel too; any failure
+    * propagates and aborts the load. Spark jobs cannot be dropped the way
+    * try_join! drops its futures, so the failure is raised once every
+    * write has stopped: none is still reading a source the caller
+    * releases on the way out (other failures ride along suppressed). */
   def writeAll(tables: Map[String, (DataFrame, Seq[String], String)], warehouse: String,
       sink: TableSink = ParquetSink): Unit = {
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val jobs = tables.map { case (name, (df, sortKeys, numberCol)) =>
+    val jobs = tables.toSeq.map { case (name, (df, sortKeys, numberCol)) =>
       Future(writeBucketed(df, s"$warehouse/$name", sortKeys, numberCol, sink))
     }
-    Await.result(Future.sequence(jobs), Duration.Inf)
+    val failures = jobs.map(Await.ready(_, Duration.Inf).value.get).collect { case Failure(e) => e }
+    failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
   }
 
   /** Interchange formats: schema-enforced JSON/CSV export + import of any
@@ -344,35 +350,69 @@ object Load {
     }
   }
 
-  /** The four flattened chain tables of a block range — D1's inputs,
-    * exposed so the scale bench can time extract+flatten separately from
-    * the bucketed write. */
-  def tables(spark: SparkSession, from: Long, to: Long,
-      endpoint: Option[String] = None): Map[String, (DataFrame, Seq[String], String)] = {
-    val blocks = graft.sources.BlockFetcher.blocks(spark, from, to, endpoint)
-    val receipts = graft.sources.BlockFetcher.receipts(spark, from, to, endpoint)
+  /** The one read of a block range ([[graft.sources.BlockFetcher.blocksWithReceipts]]:
+    * two RPCs per block), persisted MEMORY_AND_DISK so that all four
+    * tables flatten from it. Lazy: the first action fetches. */
+  private def fetch(spark: SparkSession, from: Long, to: Long,
+      endpoint: Option[String]): Dataset[BlockWithReceipts] =
+    graft.sources.BlockFetcher.blocksWithReceipts(spark, from, to, endpoint)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Runs `body` over the one read of a block range, then releases the
+    * read's cache, whether `body` returns or throws. */
+  def withFetch[A](spark: SparkSession, from: Long, to: Long,
+      endpoint: Option[String])(body: Dataset[BlockWithReceipts] => A): A = {
+    val fetched = fetch(spark, from, to, endpoint)
+    try body(fetched) finally fetched.unpersist(blocking = true)
+  }
+
+  /** The four flattened chain tables of one read — D1's inputs. Every
+    * table projects or explodes the same rows; nothing is joined. */
+  def tables(fetched: Dataset[BlockWithReceipts]): Map[String, (DataFrame, Seq[String], String)] = {
+    val blocks = Flatten.blocksOf(fetched)
     Map(
       "blocks" -> ((Flatten.blockRows(blocks), Schemas.dedupKeys("blocks"), "number")),
-      "transactions" -> ((Flatten.transactionRows(blocks, receipts),
+      "transactions" -> ((Flatten.transactionRows(fetched),
         Schemas.dedupKeys("transactions"), "blockNumber")),
-      "events" -> ((Flatten.eventRows(blocks, receipts),
+      "events" -> ((Flatten.eventRows(fetched),
         Schemas.dedupKeys("events"), "blockNumber")),
       "withdraws" -> ((Flatten.withdrawalRows(blocks),
         Schemas.dedupKeys("withdraws"), "blockNumber"))
     )
   }
 
+  /** The four flattened chain tables of a block range, exposed so the
+    * scale bench can time extract+flatten separately from the bucketed
+    * write. All four share one read of the range (two RPCs per block),
+    * which stays cached for the session until the caller drops it
+    * (`spark.catalog.clearCache()`); [[withFetch]] with
+    * `tables(fetched)` releases it instead. */
+  def tables(spark: SparkSession, from: Long, to: Long,
+      endpoint: Option[String] = None): Map[String, (DataFrame, Seq[String], String)] =
+    tables(fetch(spark, from, to, endpoint))
+
   /** Full ingest of a block range into the warehouse — the reference's
     * main loop (src/main.rs:172-336) as one declarative batch job.
     * `endpoint` selects the transport: HTTP JSON-RPC url, or the offline
-    * fixture when absent. After ALL four tables land, a per-range
-    * `_complete` marker records the covered slice — the commit record
-    * [[ingestResumable]] keys on (a crash anywhere before this point
-    * leaves no marker, so the whole range is re-ingested on resume). */
+    * fixture when absent. Each block is fetched once (two RPCs, as in the
+    * reference) and held only for the duration of the call: the cache is
+    * released on success and on a failed write alike. */
   def ingest(spark: SparkSession, from: Long, to: Long, warehouse: String,
-      endpoint: Option[String] = None, sink: TableSink = ParquetSink): Unit = {
-    writeAll(tables(spark, from, to, endpoint), warehouse, sink)
-    val (fs, dir) = WarehouseFs.resolve(spark, s"$warehouse/_complete")
+      endpoint: Option[String] = None, sink: TableSink = ParquetSink): Unit =
+    withFetch(spark, from, to, endpoint)(land(_, from, to, warehouse, sink))
+
+  /** Lands the one read of [from, to] (from [[withFetch]]) in the
+    * warehouse. One action first materializes the read, so the four
+    * concurrent table writes all read the cache rather than each fetching.
+    * After ALL four tables land, a per-range `_complete` marker records
+    * the covered slice — the commit record [[ingestResumable]] keys on (a
+    * crash anywhere before this point leaves no marker, so the whole
+    * range is re-ingested on resume). */
+  def land(fetched: Dataset[BlockWithReceipts], from: Long, to: Long, warehouse: String,
+      sink: TableSink): Unit = {
+    fetched.count()
+    writeAll(tables(fetched), warehouse, sink)
+    val (fs, dir) = WarehouseFs.resolve(fetched.sparkSession, s"$warehouse/_complete")
     WarehouseFs.mkdirs(fs, dir)
     (from / Batch to to / Batch).foreach { r =>
       val lo = math.max(from, r * Batch)

@@ -7,7 +7,7 @@ import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, TimeUnit}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import graft.etl.{BlockReceipts, ChainFixture, RpcBlock, RpcLog, RpcReceipt, RpcTx, RpcWithdrawal}
+import graft.etl.{BlockReceipts, BlockWithReceipts, ChainFixture, RpcBlock, RpcLog, RpcReceipt, RpcTx, RpcWithdrawal}
 
 /** A2/A3 transport abstraction: one instance per scan partition, issuing
   * the reference's two RPCs per block (`eth_getBlockByNumber(n, true)` +
@@ -18,6 +18,13 @@ import graft.etl.{BlockReceipts, ChainFixture, RpcBlock, RpcLog, RpcReceipt, Rpc
 trait BlockFetcher extends AutoCloseable {
   def blockWithTxs(n: Long): RpcBlock
   def blockReceipts(n: Long): BlockReceipts
+
+  /** Both RPCs of block `n`, one after the other, as one row. */
+  def blockWithReceipts(n: Long): BlockWithReceipts = {
+    val b = blockWithTxs(n)
+    BlockWithReceipts(b.number, b, blockReceipts(n).receipts)
+  }
+
   override def close(): Unit = ()
 }
 
@@ -164,7 +171,7 @@ class HttpJsonRpcFetcher(endpoint: String) extends BlockFetcher {
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
       .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+    val resp = send(req)
     if (resp.statusCode() != 200)
       throw new java.io.IOException(s"$method HTTP ${resp.statusCode()}")
     val root = mapper.readTree(resp.body())
@@ -173,11 +180,28 @@ class HttpJsonRpcFetcher(endpoint: String) extends BlockFetcher {
     root.get("result")
   }
 
+  /** Sends `req`, retrying a transport failure — an `IOException` before
+    * any reply, such as a pooled keep-alive connection the server closed
+    * while it was being reused ("header parser received no bytes") — up
+    * to [[HttpJsonRpcFetcher.Attempts]] sends in all. Both methods are
+    * idempotent reads. A reply is final: a non-200 status or a JSON-RPC
+    * `error` is never retried. */
+  private def send(req: HttpRequest, attempt: Int = 1): HttpResponse[String] =
+    try client.send(req, HttpResponse.BodyHandlers.ofString())
+    catch {
+      case _: java.io.IOException if attempt < HttpJsonRpcFetcher.Attempts => send(req, attempt + 1)
+    }
+
   override def blockWithTxs(n: Long): RpcBlock =
     RpcWire.parseBlock(n, rpc("eth_getBlockByNumber", s"""["0x${n.toHexString}",true]"""))
 
   override def blockReceipts(n: Long): BlockReceipts =
     RpcWire.parseReceipts(n, rpc("eth_getBlockReceipts", s"""["0x${n.toHexString}"]"""))
+}
+
+object HttpJsonRpcFetcher {
+  /** Sends per RPC call when the transport fails before a reply. */
+  val Attempts = 3
 }
 
 /** WebSocket JSON-RPC transport — the reference's actual wire
@@ -319,24 +343,41 @@ object BlockFetcher {
     f
   }
 
-  /** Distributed block extract over any transport: each task constructs
-    * its own fetcher for its contiguous sub-range (the parallel form of
-    * the reference's sequential loop, main.rs:172). */
-  def blocks(spark: org.apache.spark.sql.SparkSession, from: Long, to: Long,
-      endpoint: Option[String]): org.apache.spark.sql.Dataset[RpcBlock] = {
+  /** Distributed extract over any transport: each task constructs its
+    * own fetcher for its contiguous sub-range and applies `read` to every
+    * block of it (the parallel form of the reference's sequential loop,
+    * main.rs:172). */
+  private def scan[T: org.apache.spark.sql.Encoder](spark: org.apache.spark.sql.SparkSession,
+      from: Long, to: Long, endpoint: Option[String])(
+      read: (BlockFetcher, Long) => T): org.apache.spark.sql.Dataset[T] = {
     import spark.implicits._
     spark.range(from, to + 1).as[Long].mapPartitions { it =>
       val f = taskScoped(endpoint)
-      it.map(f.blockWithTxs)
+      it.map(read(f, _))
     }
   }
 
+  /** The ingest's one read: a row per block carrying the block and its
+    * receipts, fetched with exactly the reference's two RPCs per block
+    * over one transport per partition. Every chain table flattens from
+    * this scan ([[graft.etl.Load.tables]]). */
+  def blocksWithReceipts(spark: org.apache.spark.sql.SparkSession, from: Long, to: Long,
+      endpoint: Option[String]): org.apache.spark.sql.Dataset[BlockWithReceipts] = {
+    import spark.implicits._
+    scan(spark, from, to, endpoint)(_.blockWithReceipts(_))
+  }
+
+  /** Blocks alone: `eth_getBlockByNumber` per block. */
+  def blocks(spark: org.apache.spark.sql.SparkSession, from: Long, to: Long,
+      endpoint: Option[String]): org.apache.spark.sql.Dataset[RpcBlock] = {
+    import spark.implicits._
+    scan(spark, from, to, endpoint)(_.blockWithTxs(_))
+  }
+
+  /** Receipts alone: `eth_getBlockReceipts` per block. */
   def receipts(spark: org.apache.spark.sql.SparkSession, from: Long, to: Long,
       endpoint: Option[String]): org.apache.spark.sql.Dataset[BlockReceipts] = {
     import spark.implicits._
-    spark.range(from, to + 1).as[Long].mapPartitions { it =>
-      val f = taskScoped(endpoint)
-      it.map(f.blockReceipts)
-    }
+    scan(spark, from, to, endpoint)(_.blockReceipts(_))
   }
 }

@@ -460,11 +460,18 @@ class ChainEtlSpec extends SparkSuite {
     }
     val whClean = java.nio.file.Files.createTempDirectory("graft_crash_clean").toString
     val whCrash = java.nio.file.Files.createTempDirectory("graft_crash").toString
+    // the ingest's one read is cached only for the call: neither a clean
+    // nor a crashed ingest leaves a persisted RDD or a cached plan behind
+    def cached() = (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+      org.apache.spark.sql.CachedPlans.count(spark))
+    val before = cached()
     graft.etl.Load.ingest(spark, 0, 1499, whClean)
+    assert(cached() == before, "a clean ingest must release its read")
     val boom = intercept[RuntimeException] {
       graft.etl.Load.ingest(spark, 0, 1499, whCrash, sink = new CrashingSink("events", 750L))
     }
     assert(boom.getMessage.contains("injected crash"))
+    assert(cached() == before, "a crashed ingest must release its read")
     // the wreckage is what a real crash leaves: full blocks, partial events
     assert(spark.read.parquet(s"$whCrash/blocks").count() == 1500)
     val partialEvents = spark.read.parquet(s"$whCrash/events").count()

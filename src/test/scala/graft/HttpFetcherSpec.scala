@@ -75,4 +75,82 @@ class HttpFetcherSpec extends SparkSuite {
       assert(viaHttp.except(offline).count() == 0 && offline.except(viaHttp).count() == 0)
     }
   }
+
+  /** A raw-socket JSON-RPC node answering one request per connection. It
+    * reads the first `drop` requests and closes their connections
+    * unanswered; the rest it answers with `status` and either the fixture
+    * result or, when `rpcError`, a JSON-RPC `error`. */
+  private final class FlakyNode(drop: Int, status: Int = 200, rpcError: Boolean = false)
+      extends AutoCloseable {
+    private val mapper = new ObjectMapper()
+    private val server = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val connections = new java.util.concurrent.atomic.AtomicInteger()
+    val url = s"http://127.0.0.1:${server.getLocalPort}/"
+
+    private def readRequest(in: java.io.InputStream): String = {
+      val head = new StringBuilder
+      while (!head.endsWith("\r\n\r\n")) {
+        val c = in.read()
+        if (c < 0) throw new java.io.EOFException("request ended early")
+        head.append(c.toChar)
+      }
+      val len = "(?i)content-length:\\s*(\\d+)".r.findFirstMatchIn(head).map(_.group(1).toInt)
+        .getOrElse(0)
+      new String(in.readNBytes(len), StandardCharsets.UTF_8)
+    }
+
+    private val thread = new Thread(() =>
+      try while (true) {
+        val socket = server.accept()
+        try {
+          val req = readRequest(socket.getInputStream)
+          if (connections.incrementAndGet() > drop) {
+            val id = mapper.readTree(req).get("id").asLong()
+            val body = (if (rpcError) s"""{"jsonrpc":"2.0","id":$id,"error":{"code":-32000,"message":"no"}}"""
+              else RpcStubWire.respond(req, mapper)).getBytes(StandardCharsets.UTF_8)
+            val out = socket.getOutputStream
+            out.write((s"HTTP/1.1 $status X\r\nContent-Type: application/json\r\n" +
+              s"Content-Length: ${body.length}\r\nConnection: close\r\n\r\n")
+              .getBytes(StandardCharsets.UTF_8))
+            out.write(body)
+            out.flush()
+          }
+        } finally socket.close()
+      } catch { case _: java.io.IOException => () }) // the server socket closed
+    thread.setDaemon(true)
+    thread.start()
+
+    override def close(): Unit = server.close()
+  }
+
+  test("HTTP fetcher retries a connection dropped before any reply") {
+    val node = new FlakyNode(drop = 1)
+    val fetcher = new HttpJsonRpcFetcher(node.url)
+    try {
+      val got = fetcher.blockWithTxs(22L)
+      assert(RpcStubWire.blockJson(got) == RpcStubWire.blockJson(ChainFixture.genBlock(22L)))
+      assert(node.connections.get() == 2)
+    } finally { fetcher.close(); node.close() }
+  }
+
+  test("HTTP fetcher gives up after a bounded number of dropped connections") {
+    val node = new FlakyNode(drop = Int.MaxValue)
+    val fetcher = new HttpJsonRpcFetcher(node.url)
+    try {
+      intercept[java.io.IOException](fetcher.blockReceipts(3L))
+      assert(node.connections.get() == HttpJsonRpcFetcher.Attempts)
+    } finally { fetcher.close(); node.close() }
+  }
+
+  test("HTTP non-200 replies and JSON-RPC errors are final, not retried") {
+    Seq(new FlakyNode(drop = 0, status = 500) -> "HTTP 500",
+      new FlakyNode(drop = 0, rpcError = true) -> "RPC error").foreach { case (node, msg) =>
+      val fetcher = new HttpJsonRpcFetcher(node.url)
+      try {
+        val e = intercept[java.io.IOException](fetcher.blockWithTxs(1L))
+        assert(e.getMessage.contains(msg), e.getMessage)
+        assert(node.connections.get() == 1)
+      } finally { fetcher.close(); node.close() }
+    }
+  }
 }
