@@ -297,7 +297,7 @@ object DedupOps {
     * verification touches. `pairs`: verified dup pairs
     * (a, b, inter, jaccard ≥ 0.5). */
   private[graft] case class DupTables(cand: DataFrame, sh: DataFrame,
-      pairs: DataFrame, rddIds: Set[Int], buildSec: Double)
+      pairs: DataFrame, rddIds: Set[Int], buildSec: Double, dir: String = "")
 
   private[graft] def dupTablesOf(base: DataFrame): DupTables = {
     val sc = base.sparkSession.sparkContext
@@ -354,7 +354,7 @@ object DedupOps {
     if (live) hit
     else {
       if (hit != null) unpersistDupTables(hit)
-      val t = dupTablesOf(corpus(s, dir))
+      val t = dupTablesOf(corpus(s, dir)).copy(dir = dir)
       dupCache.put(key, t)
       t
     }
@@ -375,9 +375,9 @@ object DedupOps {
     * family sharing is visible in the artifact (r15 verdict rule). */
   private[graft] def sharedBuildSeconds(s: SparkSession): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
-    dupCache.entrySet().asScala
-      .filter(_.getValue.pairs.sparkSession eq s)
-      .map(e => e.getKey.dropWhile(_ != ':').drop(1) -> e.getValue.buildSec)
+    dupCache.values.asScala
+      .filter(_.pairs.sparkSession eq s)
+      .map(t => t.dir -> t.buildSec)
       .toMap
   }
 

@@ -240,7 +240,7 @@ object GraphOps {
     * unchanged, only the rebuild disappears. */
   private[graft] case class CoTables(pairs: DataFrame, und: DataFrame,
       deg: DataFrame, se: DataFrame, rddIds: Set[Int],
-      buildSec: Double = 0.0)
+      buildSec: Double = 0.0, dir: String = "")
 
   private[graft] def coTablesOf(membership: DataFrame): CoTables = {
     // snapshot the persisted-RDD set around the build: the delta is the
@@ -312,6 +312,7 @@ object GraphOps {
       if (hit != null) unpersistCoTables(hit)
       val t = coTablesOf(s.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")))
+        .copy(dir = dir)
       coCache.put(key, t)
       t
     }
@@ -333,9 +334,9 @@ object GraphOps {
     * What's-wrong #3). */
   private[graft] def sharedBuildSeconds(s: SparkSession): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
-    coCache.entrySet().asScala
-      .filter(_.getValue.und.sparkSession eq s)
-      .map(e => e.getKey.dropWhile(_ != ':').drop(1) -> e.getValue.buildSec)
+    coCache.values.asScala
+      .filter(_.und.sparkSession eq s)
+      .map(t => t.dir -> t.buildSec)
       .toMap
   }
 

@@ -59,4 +59,20 @@ class DupTablesCacheSpec extends SparkSuite {
       .select("a", "b", "inter", "jaccard").collect().toSet
     assert(shared == reference)
   }
+
+  test("shared build line items keep a source dir that contains ':'") {
+    // a `file:` URI to a directory whose own name has a colon: the
+    // line-item label is the dir each entry was built from, verbatim
+    val tmp = java.nio.file.Files.createTempDirectory("graft_colon")
+    val link = java.nio.file.Files.createSymbolicLink(
+      tmp.resolve("sf:0.001"), java.nio.file.Paths.get(dir))
+    val colonDir = s"file:$link"
+    DedupOps.dupPairs(spark, colonDir).count()
+    GraphOps.triangles(spark, colonDir).count()
+    assert(DedupOps.sharedBuildSeconds(spark).contains(colonDir))
+    assert(GraphOps.sharedBuildSeconds(spark).contains(colonDir))
+    val entries = Bench.sharedBuildEntries(spark).toMap
+    assert(entries.contains(s"dedup_minhash:$colonDir"), entries.keys)
+    assert(entries.contains(s"graph_cotables:$colonDir"), entries.keys)
+  }
 }

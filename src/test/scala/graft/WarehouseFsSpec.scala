@@ -2,12 +2,14 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.sql.functions._
 
+import graft.etl.GraftRawLocalFileSystem
 import graft.types.Schemas
 
-/** [[RawLocalFileSystem]] re-registered under a `graftfs:` scheme — a
+/** [[GraftRawLocalFileSystem]] (the engine's fork-free local file
+  * system, so its status and permission paths also run under a foreign
+  * scheme) re-registered under a `graftfs:` scheme — a
   * NON-`file:` scheme whose bytes still land on local disk. Maintenance
   * code that (wrongly) binds to `java.io.File` sees a `graftfs:/...`
   * string as a relative local filename: existence probes return false
@@ -16,7 +18,7 @@ import graft.types.Schemas
   * deleteWhere → compact cycle through this scheme proves every
   * maintenance path goes through the Hadoop FileSystem API instead.
   */
-class GraftTestFileSystem extends RawLocalFileSystem {
+class GraftTestFileSystem extends GraftRawLocalFileSystem {
   override def getUri: URI = URI.create("graftfs:///")
 }
 
