@@ -113,10 +113,11 @@ object Bench {
     // measure the query, not first-use classloading
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // Full warmup sweep: EVERY query once, UNTIMED, on the target sf.
-    // Round 11's SweepEffect A/B showed why headline-only warmup is not
-    // enough: a query whose first-ever execution lands mid-sweep queues
-    // its generated classes behind a JIT backlog minutes deep, and ALL
-    // of its interleaved timed reps then run semi-interpreted
+    // Round 11's in-sweep A/B (SCALE.md, "Round-11: the in-sweep JIT
+    // penalty") showed why headline-only warmup is not enough: a query
+    // whose first-ever execution lands mid-sweep queues its generated
+    // classes behind a JIT backlog minutes deep, and ALL of its
+    // interleaved timed reps then run semi-interpreted
     // (graph_triangles: 19-28 s across every rep when first executed
     // after 23 heavy queries, vs 8 s for the same in-sweep reps when
     // its code was compiled up front; fresh-JVM best 5.8 s). Baselines

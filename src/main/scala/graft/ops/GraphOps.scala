@@ -410,12 +410,12 @@ object GraphOps {
     // Both wedge arms shuffle on src from the SAME checkpointed plan, so
     // the second exchange is reused; the wedge stream itself is never
     // shuffled again — it flows straight into the closure probe below.
-    // r15 probe (WedgeProbe): pinning this exchange to the session's
-    // full parallelism (the link_prediction fix) measured NEUTRAL-to-
-    // WORSE here (3.35-3.48 s off vs 3.54-5.23 s on) — triangles'
-    // oriented wedge stream is ~half link_prediction's and the extra
-    // edge-table exchange costs more than the parallelism buys. Left
-    // AQE-sized on purpose.
+    // r15 A/B (OPTIMIZATION_r15.md, refuted item 2): pinning this
+    // exchange to the session's full parallelism (the link_prediction
+    // fix) measured NEUTRAL-to-WORSE here (3.35-3.48 s off vs
+    // 3.54-5.23 s on) — triangles' oriented wedge stream is ~half
+    // link_prediction's and the extra edge-table exchange costs more
+    // than the parallelism buys. Left AQE-sized on purpose.
     val wedges = ori.as("e1").join(ori.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.kdst") < col("e2.kdst"))
       .select(col("e1.src").as("u"), col("e1.dst").as("v"), col("e2.dst").as("w"))
@@ -1107,10 +1107,10 @@ object GraphOps {
     // OUT of a 30 MB input — 27.8 s on 16 of 32 cores, the single
     // hottest stage in the suite). Output-exploding stages get the
     // session's full parallelism; AQE cannot infer expansion from input
-    // stats at any scale. WedgeProbe A/B (interleaved, one JVM, sf0.1):
-    // on = 5.0-6.7 s stable; off = 7.6-43 s — the coalesced layout also
-    // concentrates hot wedge centers, so the off-arm is skew-prone, not
-    // just narrower. (Triangles measured the OPPOSITE — see
+    // stats at any scale. A/B (OPTIMIZATION_r15.md §4; interleaved, one
+    // JVM, sf0.1): on = 5.0-6.7 s stable; off = 7.6-43 s — the coalesced
+    // layout also concentrates hot wedge centers, so the off-arm is
+    // skew-prone, not just narrower. (Triangles measured the OPPOSITE — see
     // trianglesFrom — hence per-kernel, not blanket.)
     val adj0 = und.select(col("a").as("ctr"), col("b").as("nb"))
       .unionByName(und.select(col("b").as("ctr"), col("a").as("nb")))

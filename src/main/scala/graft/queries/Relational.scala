@@ -702,7 +702,8 @@ object Relational {
          |    ON o.o_custkey = r.o_custkey AND o.rn = r.step + 1)
          |SELECT o_custkey, o_orderkey, step, run_cents
          |FROM r ORDER BY o_custkey, step""".stripMargin)
-    // r15 optimization probes, measured and REJECTED (Q50Probe, sf0.1):
+    // r15 optimization probes, measured and REJECTED (sf0.1; numbers in
+    // OPTIMIZATION_r15.md §5):
     // - /*+ BROADCAST(r) */ on the frontier: 3.0-3.1 s vs 4.5 s unhinted —
     //   but the frontier is CUSTOMER-cardinality at step 1 (corpus-growing),
     //   exactly the forced-broadcast class the r14 verdict marked weak;

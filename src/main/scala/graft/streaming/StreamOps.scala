@@ -823,35 +823,43 @@ object StreamOps {
       }
       .start()
 
-  /** Streaming chain ingest: a stream of block heights drives the SAME
-    * batch flattens (C1-C4) + dedup (D5) through foreachBatch — the
-    * micro-batch is the reference's 1000-block flush unit, arriving
-    * live. Each batch lands in its own `batch_id` partition via dynamic
+  /** One micro-batch of the streaming chain ingest — factored out (like
+    * dailyRollupBatch) so the starter below and a harness-run
+    * checkpointed query share the identical logic: the batch's block
+    * heights drive the SAME batch flattens (C1-C4) + dedup (D5), and
+    * the rows land in the batch's own `batch_id` partition via dynamic
     * overwrite, so a replayed batch rewrites its partition instead of
     * appending duplicate rows. */
+  def chainIngestBatch(spark: SparkSession, batch: DataFrame, warehouse: String,
+      batchId: Long): Unit = {
+    import spark.implicits._
+    val nums = batch.select(col("number")).as[Long]
+    val blocks = nums.map(ChainFixture.genBlock)
+    val receipts = nums.map(ChainFixture.genReceipts)
+    val rows = Flatten.transactionRows(blocks, receipts)
+    Dedup.exact(rows, Schemas.dedupKeys("transactions"))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(s"$warehouse/transactions_stream")
+  }
+
+  /** Streaming chain ingest: a stream of block heights through
+    * [[chainIngestBatch]] — the micro-batch is the reference's
+    * 1000-block flush unit, arriving live. */
   def chainIngestStream(
       spark: SparkSession,
       heights: DataFrame, // streaming frame with a `number: Long` column
       warehouse: String,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
     val writer = heights
       .writeStream
       .outputMode(OutputMode.Append)
     checkpoint.foreach(c => writer.option("checkpointLocation", c))
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val nums = batch.select(col("number")).as[Long]
-        val blocks = nums.map(ChainFixture.genBlock)
-        val receipts = nums.map(ChainFixture.genReceipts)
-        val rows = Flatten.transactionRows(blocks, receipts)
-        Dedup.exact(rows, Schemas.dedupKeys("transactions"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$warehouse/transactions_stream")
-        ()
+        chainIngestBatch(spark, batch, warehouse, batchId)
       }
       .start()
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.etl.{Scratch, WarehouseFs}
 
@@ -51,11 +52,9 @@ import graft.etl.{Scratch, WarehouseFs}
   *    [[streamFunnelParity]] runs with event-time timeouts firing and
   *    an oracle that replays the eviction schedule in SQL.
   *
-  * Micro-batching is forced and deterministic: the fixture is landed as
-  * `NumBatches` hash-bucketed parquet files and streamed back with
-  * `maxFilesPerTrigger = 1`, so the query genuinely executes N
-  * micro-batches through the checkpointed foreachBatch path (each with
-  * its own read-merge-overwrite cycle), not one degenerate batch.
+  * Every query runs through ONE harness, [[replay]], which owns the
+  * replay policy; a query keeps only its fixture, operator, output
+  * mode, sink and read-back.
   *
   * Determinism of the money column follows the family's proven
   * round(value·100) cents convention (Behavioral.scala): values are
@@ -74,22 +73,82 @@ object StreamParity {
     p
   }
 
-  /** Run `body` with the stream-sized shuffle-partition count, restoring
-    * the session setting after. A stateful query's state partitioning is
-    * fixed by spark.sql.shuffle.partitions at its FIRST checkpoint —
-    * exactly the per-workload knob a production stream sets. The parity
-    * fixtures' micro-batches hold at most a few thousand rows, so the
-    * session's 32 means 32 state files per operator per batch (the
-    * 16-batch twins wrote 17×32 of them); 8 is the honest sizing here
-    * and costs ~25% of the twins' wall clock, not correctness — every
-    * parity oracle is partitioning-independent by construction (that is
-    * what the fuzz families prove). */
+  /** The stream-sized shuffle-partition count a replay runs under. A
+    * stateful query's state partitioning is fixed by
+    * spark.sql.shuffle.partitions at its FIRST checkpoint — exactly the
+    * per-workload knob a production stream sets. The parity fixtures'
+    * micro-batches hold at most a few thousand rows, so the session's 32
+    * means 32 state files per operator per batch (the 16-batch twins
+    * wrote 17×32 of them); 8 is the honest sizing here and costs ~25% of
+    * the twins' wall clock, not correctness — every parity oracle is
+    * partitioning-independent by construction (that is what the fuzz
+    * families prove). */
   private val StreamShufflePartitions = "8"
-  private def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
+
+  /** A replay's foreachBatch sink: (output dir, micro-batch, batch id). */
+  private[graft] type Sink = (String, DataFrame, Long) => Unit
+
+  /** Plain append: Append-mode rows are final (each window / row is
+    * emitted once), so an append is replay-safe enough for parity. */
+  private val appendSink: Sink = (out, batch, _) =>
+    batch.write.mode("append").parquet(out)
+
+  /** Each micro-batch into its own `batch_id` partition by dynamic
+    * overwrite: a replayed batch rewrites its partition, never
+    * duplicates it. */
+  private val batchIdSink: Sink = (out, batch, batchId) =>
+    batch.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(out)
+
+  /** The replay harness — the only owner of the replay policy. Under
+    * [[StreamShufflePartitions]] (the session value is restored after,
+    * also on failure) it
+    *  1. frees `root/<i>` for each of `inputs`, then `root/<out>` and
+    *     `root/ckpt`;
+    *  2. runs `land` over the input dirs: it writes the fixture there
+    *     and returns the landed rows' schema;
+    *  3. opens one file source per input dir with
+    *     `maxFilesPerTrigger = 1` and passes them, in `inputs` order, to
+    *     `query`;
+    *  4. runs `query`'s result as ONE checkpointed query in `mode`
+    *     whose foreachBatch hands each micro-batch to `sink`;
+    *  5. drains it with processAllAvailable and stops it in a `finally`,
+    *     so a failing batch reaches the caller with no query left active;
+    *
+    * and returns `readBack` of the output dir.
+    *
+    * Micro-batching is forced and deterministic: the fixture is landed as
+    * one parquet file per micro-batch (hash-bucketed, or mtime-ordered
+    * by [[landOrdered]]) and streamed back one file per trigger, so the
+    * query genuinely executes N micro-batches through the checkpointed
+    * foreachBatch path (each with its own sink write), not one
+    * degenerate batch. */
+  private[graft] def replay(s: SparkSession, root: String, mode: OutputMode,
+      sink: Sink, out: String = "out", inputs: Seq[String] = Seq("in"))(
+      land: Seq[String] => StructType)(
+      query: Seq[DataFrame] => DataFrame)(
+      readBack: String => DataFrame): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, StreamShufflePartitions)
-    try body finally s.conf.set(key, prev)
+    try {
+      val inDirs = inputs.map(i => freshDir(s, s"$root/$i"))
+      val outDir = freshDir(s, s"$root/$out")
+      val ckpt = freshDir(s, s"$root/ckpt")
+      val schema = land(inDirs)
+      val streams = inDirs.map(d =>
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d))
+      val q = query(streams).writeStream
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, batchId: Long) => sink(outDir, batch, batchId) }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      readBack(outDir)
+    } finally s.conf.set(key, prev)
   }
 
   /** Bucketing column for the split-invariance FUZZ sweep: salt = 0 is
@@ -109,30 +168,22 @@ object StreamParity {
     streamRollupParityN(s, dir, NumBatches, 0L, "")
 
   private[graft] def streamRollupParityN(s: SparkSession, dir: String,
-      numBatches: Int, salt: Long, tag: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, s"stream_rollup$tag/in")
-    val table = freshDir(s, s"stream_rollup$tag/table")
-    val ckpt = freshDir(s, s"stream_rollup$tag/ckpt")
-    val ev = s.read.parquet(s"$dir/events.parquet")
-      .select(col("event_id"), col("ts"), col("event_type"),
-        expr("CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE)").as("value"))
-    // exactly numBatches files -> exactly that many micro-batches
-    ev.repartition(numBatches, bucketed(col("event_id"), salt)).write.parquet(inDir)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamOps.dailyRollupBatch(s, batch, table, batchId)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(table)
-      .select(col("day"), col("event_type"), col("n"),
-        col("total").cast("long").as("total_cents"))
-      .orderBy(col("day"), col("event_type"))
-  }
+      numBatches: Int, salt: Long, tag: String): DataFrame =
+    replay(s, s"stream_rollup$tag", OutputMode.Append,
+        (table, batch, batchId) => StreamOps.dailyRollupBatch(s, batch, table, batchId),
+        out = "table") { case Seq(in) =>
+      val ev = s.read.parquet(s"$dir/events.parquet")
+        .select(col("event_id"), col("ts"), col("event_type"),
+          expr("CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE)").as("value"))
+      // exactly numBatches files -> exactly that many micro-batches
+      ev.repartition(numBatches, bucketed(col("event_id"), salt)).write.parquet(in)
+      ev.schema
+    } { case Seq(ev) => ev } { table =>
+      s.read.parquet(table)
+        .select(col("day"), col("event_type"), col("n"),
+          col("total").cast("long").as("total_cents"))
+        .orderBy(col("day"), col("event_type"))
+    }
 
   val streamRollupParitySql: String =
     """SELECT CAST(ts AS DATE) AS day, event_type,
@@ -147,23 +198,21 @@ object StreamParity {
     * the batch flatten of the same height range (heights are disjoint
     * across slices and dedup is intra-key, so the union is
     * split-invariant). Oracle recomputes from the chain_raw dump. */
-  def streamChainIngest(s: SparkSession, dir: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, "stream_chain/in")
-    val wh = freshDir(s, "stream_chain/wh")
-    val ckpt = freshDir(s, "stream_chain/ckpt")
-    val heights = s.range(0L, 200L).toDF("number")
-    heights.repartition(NumBatches, col("number")).write.parquet(inDir)
-    val stream = s.readStream.schema(heights.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.chainIngestStream(s, stream, wh, Some(ckpt))
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(s"$wh/transactions_stream")
-      .groupBy(col("blockNumber").cast("long").as("block_no"))
-      .agg(count(lit(1)).as("n_tx"),
-        countDistinct(hex(col("hash"))).as("n_hashes"),
-        sum(col("transactionIndex")).as("sum_tx_index"))
-      .orderBy(col("block_no"))
-  }
+  def streamChainIngest(s: SparkSession, dir: String): DataFrame =
+    replay(s, "stream_chain", OutputMode.Append,
+        (wh, batch, batchId) => StreamOps.chainIngestBatch(s, batch, wh, batchId),
+        out = "wh") { case Seq(in) =>
+      val heights = s.range(0L, 200L).toDF("number")
+      heights.repartition(NumBatches, col("number")).write.parquet(in)
+      heights.schema
+    } { case Seq(heights) => heights } { wh =>
+      s.read.parquet(s"$wh/transactions_stream")
+        .groupBy(col("blockNumber").cast("long").as("block_no"))
+        .agg(count(lit(1)).as("n_tx"),
+          countDistinct(hex(col("hash"))).as("n_hashes"),
+          sum(col("transactionIndex")).as("sum_tx_index"))
+        .orderBy(col("block_no"))
+    }
 
   val streamChainIngestSql: String = {
     val t = s"'${graft.queries.ChainQueries.RawDumpDir}/chain_raw_transactions/*.parquet'"
@@ -182,47 +231,32 @@ object StreamParity {
     * is split-sensitive — that one is graded under the CONTRACTUAL
     * ordered split instead: [[streamMgParity]]).
     *
-    * Execution: the fixture's exploded term column lands as NumBatches
-    * hash-bucketed files and streams back one file per trigger through
-    * [[StreamOps.cmsStream]] (keyed stream state, Update mode); each
-    * batch's updated cells land in a `batch_id` partition (dynamic
-    * overwrite — replay rewrites, never duplicates), and the final
-    * counter per cell is the max across batches (counters are monotone
-    * nondecreasing). The DuckDB oracle rebuilds the identical grid from
-    * exact term counts and the shared PolyHash/affine-row expressions. */
+    * [[StreamOps.cmsStream]] emits each batch's updated cells (Update
+    * mode), and the final counter per cell is the max across batches
+    * (counters are monotone nondecreasing). The DuckDB oracle rebuilds
+    * the identical grid from exact term counts and the shared
+    * PolyHash/affine-row expressions. */
   def streamCmsParity(s: SparkSession, dir: String): DataFrame =
     streamCmsParityN(s, dir, NumBatches, 0L, "")
 
   private[graft] def streamCmsParityN(s: SparkSession, dir: String,
-      numBatches: Int, salt: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      numBatches: Int, salt: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_cms$tag/in")
-    val cellsDir = freshDir(s, s"stream_cms$tag/cells")
-    val ckpt = freshDir(s, s"stream_cms$tag/ckpt")
-    val terms = s.read.parquet(s"$dir/documents.parquet")
-      .select(explode(graft.ops.TextOps.tokens(col("text"))).as("term"))
-    terms.repartition(numBatches, bucketed(col("term"), salt)).write.parquet(inDir)
-    val stream = s.readStream.schema(terms.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val cells = StreamOps.cmsStream(stream.select(col("term")).as[String]).toDF()
-    val q = cells.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(cellsDir)
-      .groupBy(col("d"), col("slot"))
-      .agg(max(col("c")).as("c"))
-      .select(col("d").cast("long").as("d"), col("slot"), col("c"))
-      .orderBy(col("d"), col("slot"))
+    replay(s, s"stream_cms$tag", OutputMode.Update, batchIdSink,
+        out = "cells") { case Seq(in) =>
+      val terms = s.read.parquet(s"$dir/documents.parquet")
+        .select(explode(graft.ops.TextOps.tokens(col("text"))).as("term"))
+      terms.repartition(numBatches, bucketed(col("term"), salt)).write.parquet(in)
+      terms.schema
+    } { case Seq(terms) =>
+      StreamOps.cmsStream(terms.select(col("term")).as[String]).toDF()
+    } { cells =>
+      s.read.parquet(cells)
+        .groupBy(col("d"), col("slot"))
+        .agg(max(col("c")).as("c"))
+        .select(col("d").cast("long").as("d"), col("slot"), col("c"))
+        .orderBy(col("d"), col("slot"))
+    }
   }
 
   val streamCmsParitySql: String = {
@@ -267,44 +301,30 @@ object StreamParity {
     streamMgParityN(s, dir, NumBatches, 7L, "")
 
   private[graft] def streamMgParityN(s: SparkSession, dir: String,
-      numBatches: Int, aMul: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      numBatches: Int, aMul: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_mg$tag/in")
-    val outDir = freshDir(s, s"stream_mg$tag/out")
-    val ckpt = freshDir(s, s"stream_mg$tag/ckpt")
-    val terms = s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"),
-        posexplode(graft.ops.TextOps.tokens(col("text"))).as(Seq("pos", "term")))
-      .withColumn("_b", pmod(
-        pmod(lit(aMul) * col("doc_id") + lit(13L) * col("pos"), lit(1000003L)),
-        lit(numBatches.toLong)).cast("int"))
-      .select(col("term"), col("_b"))
-    landOrdered(s, terms, inDir, numBatches)
-    val stream = s.readStream.schema(terms.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val sums = StreamOps.heavyHittersStream(stream.select(col("term")).as[String]).toDF()
-    val q = sums.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val wShard = Window.partitionBy(col("shard"))
-      .orderBy(col("n").desc, col("batch_id").desc)
-    s.read.parquet(outDir)
-      .withColumn("_r", row_number().over(wShard)).filter(col("_r") === 1)
-      .select(col("shard").cast("long").as("shard"), col("n"), col("decs"),
-        explode(arrays_zip(col("terms"), col("ests"))).as("z"))
-      .select(col("shard"), col("n"), col("decs"),
-        col("z.terms").as("term"), col("z.ests").as("est"))
-      .orderBy(col("shard"), col("est").desc, col("term"))
+    replay(s, s"stream_mg$tag", OutputMode.Update, batchIdSink) { case Seq(in) =>
+      val terms = s.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id"),
+          posexplode(graft.ops.TextOps.tokens(col("text"))).as(Seq("pos", "term")))
+        .withColumn("_b", pmod(
+          pmod(lit(aMul) * col("doc_id") + lit(13L) * col("pos"), lit(1000003L)),
+          lit(numBatches.toLong)).cast("int"))
+        .select(col("term"), col("_b"))
+      landOrdered(s, terms, in, numBatches)
+    } { case Seq(terms) =>
+      StreamOps.heavyHittersStream(terms.select(col("term")).as[String]).toDF()
+    } { out =>
+      val wShard = Window.partitionBy(col("shard"))
+        .orderBy(col("n").desc, col("batch_id").desc)
+      s.read.parquet(out)
+        .withColumn("_r", row_number().over(wShard)).filter(col("_r") === 1)
+        .select(col("shard").cast("long").as("shard"), col("n"), col("decs"),
+          explode(arrays_zip(col("terms"), col("ests"))).as("z"))
+        .select(col("shard"), col("n"), col("decs"),
+          col("z.terms").as("term"), col("z.ests").as("est"))
+        .orderBy(col("shard"), col("est").desc, col("term"))
+    }
   }
 
   val streamMgParitySql: String = streamMgParityOracleSql(NumBatches, 7L)
@@ -371,37 +391,24 @@ object StreamParity {
     streamQhistParityN(s, dir, NumBatches, 0L, "")
 
   private[graft] def streamQhistParityN(s: SparkSession, dir: String,
-      numBatches: Int, salt: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      numBatches: Int, salt: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_qhist$tag/in")
-    val cellsDir = freshDir(s, s"stream_qhist$tag/cells")
-    val ckpt = freshDir(s, s"stream_qhist$tag/ckpt")
-    val vals = s.read.parquet(s"$dir/events.parquet")
-      .select(col("event_type").as("grp"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-    vals.repartition(numBatches, bucketed(col("grp"), salt), bucketed(col("v"), salt))
-      .write.parquet(inDir)
-    val stream = s.readStream.schema(vals.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val cells = StreamOps.quantileHistStream(
-      stream.as[(String, Long)]).toDF()
-    val q = cells.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(cellsDir)
-      .groupBy(col("grp"), col("bucket"))
-      .agg(max(col("c")).as("c")) // counters are monotone
-      .orderBy(col("grp"), col("bucket"))
+    replay(s, s"stream_qhist$tag", OutputMode.Update, batchIdSink,
+        out = "cells") { case Seq(in) =>
+      val vals = s.read.parquet(s"$dir/events.parquet")
+        .select(col("event_type").as("grp"),
+          expr("CAST(round(value * 100) AS BIGINT)").as("v"))
+      vals.repartition(numBatches, bucketed(col("grp"), salt), bucketed(col("v"), salt))
+        .write.parquet(in)
+      vals.schema
+    } { case Seq(vals) =>
+      StreamOps.quantileHistStream(vals.as[(String, Long)]).toDF()
+    } { cells =>
+      s.read.parquet(cells)
+        .groupBy(col("grp"), col("bucket"))
+        .agg(max(col("c")).as("c")) // counters are monotone
+        .orderBy(col("grp"), col("bucket"))
+    }
   }
 
   val streamQhistParitySql: String = {
@@ -431,42 +438,28 @@ object StreamParity {
     streamHllParityN(s, dir, NumBatches, 0L, "")
 
   private[graft] def streamHllParityN(s: SparkSession, dir: String,
-      numBatches: Int, salt: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      numBatches: Int, salt: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_hll$tag/in")
-    val outDir = freshDir(s, s"stream_hll$tag/out")
-    val ckpt = freshDir(s, s"stream_hll$tag/ckpt")
-    val ev = s.read.parquet(s"$dir/events.parquet")
-      .select(col("event_id"),
-        lit(0L).cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"),
-        lit(0.0).as("value"))
-    ev.repartition(numBatches, bucketed(col("user_id"), salt)).write.parquet(inDir)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val ests = StreamOps.hllDistinctStream(stream.as[StreamOps.Event]).toDF()
-    val q = ests.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    import org.apache.spark.sql.expressions.Window
-    val wLast = Window.partitionBy(col("event_type"))
-      .orderBy(col("batch_id").desc)
-    s.read.parquet(outDir)
-      .withColumn("_rn", row_number().over(wLast))
-      .filter(col("_rn") === 1)
-      .select(col("event_type"), col("n_hit"), col("n_zero"),
-        col("s_scaled"), col("est_milli"))
-      .orderBy(col("event_type"))
+    replay(s, s"stream_hll$tag", OutputMode.Update, batchIdSink) { case Seq(in) =>
+      val ev = s.read.parquet(s"$dir/events.parquet")
+        .select(col("event_id"),
+          lit(0L).cast("timestamp").as("ts"),
+          col("user_id"), col("event_type"),
+          lit(0.0).as("value"))
+      ev.repartition(numBatches, bucketed(col("user_id"), salt)).write.parquet(in)
+      ev.schema
+    } { case Seq(ev) =>
+      StreamOps.hllDistinctStream(ev.as[StreamOps.Event]).toDF()
+    } { out =>
+      val wLast = Window.partitionBy(col("event_type"))
+        .orderBy(col("batch_id").desc)
+      s.read.parquet(out)
+        .withColumn("_rn", row_number().over(wLast))
+        .filter(col("_rn") === 1)
+        .select(col("event_type"), col("n_hit"), col("n_zero"),
+          col("s_scaled"), col("est_milli"))
+        .orderBy(col("event_type"))
+    }
   }
 
   val streamHllParitySql: String = {
@@ -523,8 +516,10 @@ object StreamParity {
     * as micro-batch k — DETERMINISTICALLY, which is what turns the
     * watermark trajectory into a fixture-derivable function (see the
     * header). The coalesce(1) is harness landing, not operator shape:
-    * fixture batches are small by construction. */
-  private[graft] def landOrdered(s: SparkSession, df: DataFrame, inDir: String, n: Int): Unit = {
+    * fixture batches are small by construction. Returns the landed
+    * rows' schema (`df` without `_b`). */
+  private[graft] def landOrdered(s: SparkSession, df: DataFrame, inDir: String,
+      n: Int): StructType = {
     val (fs, root) = WarehouseFs.resolve(s, inDir)
     WarehouseFs.mkdirs(fs, root)
     // ONE job lands every bucket (repartition on _b puts each bucket in
@@ -574,6 +569,7 @@ object StreamParity {
       fs.setTimes(dest, OrderedMtimeBase + k * 60000L, -1L)
     }
     WarehouseFs.deleteTree(tfs, tp)
+    df.drop("_b").schema
   }
 
   /** Events prepared for the watermark twins: epoch-ms event time as a
@@ -654,32 +650,19 @@ object StreamParity {
     streamWindowParityN(s, dir, NumBatches, SliceHashMod, "")
 
   private[graft] def streamWindowParityN(s: SparkSession, dir: String,
-      numBatches: Int, slicing: Slicing, tag: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, s"stream_window$tag/in")
-    val outDir = freshDir(s, s"stream_window$tag/out")
-    val ckpt = freshDir(s, s"stream_window$tag/ckpt")
-    val ev = orderedEvents(s, dir)
-      .withColumn("_b", slicing.bCol(numBatches))
-    landOrdered(s, ev, inDir, numBatches)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.windowedCounts(stream)
-      .writeStream
-      .outputMode(OutputMode.Append) // emit-on-eviction: the watermark IS the result
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir) // append-mode rows are final: plain append is replay-safe enough for parity (each window emitted once)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(unix_millis(col("w_start")).as("w_start_ms"),
-        unix_millis(col("w_end")).as("w_end_ms"),
-        col("event_type"), col("n"),
-        col("total_value").cast("long").as("total_cents"))
-      .orderBy(col("w_start_ms"), col("event_type"))
-  }
+      numBatches: Int, slicing: Slicing, tag: String): DataFrame =
+    // Append = emit-on-eviction: the watermark IS the result
+    replay(s, s"stream_window$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, orderedEvents(s, dir).withColumn("_b", slicing.bCol(numBatches)),
+        in, numBatches)
+    } { case Seq(ev) => StreamOps.windowedCounts(ev) } { out =>
+      s.read.parquet(out)
+        .select(unix_millis(col("w_start")).as("w_start_ms"),
+          unix_millis(col("w_end")).as("w_end_ms"),
+          col("event_type"), col("n"),
+          col("total_value").cast("long").as("total_cents"))
+        .orderBy(col("w_start_ms"), col("event_type"))
+    }
 
   /** The oracle replays the deterministic batch schedule in SQL: a row
     * in batch k survives iff its window end > filter_wm(k) = max(ms
@@ -717,30 +700,16 @@ object StreamParity {
     streamSlidingParityN(s, dir, NumBatches, SliceHashMod, "")
 
   private[graft] def streamSlidingParityN(s: SparkSession, dir: String,
-      numBatches: Int, slicing: Slicing, tag: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, s"stream_sliding$tag/in")
-    val outDir = freshDir(s, s"stream_sliding$tag/out")
-    val ckpt = freshDir(s, s"stream_sliding$tag/ckpt")
-    val ev = orderedEvents(s, dir)
-      .withColumn("_b", slicing.bCol(numBatches))
-    landOrdered(s, ev, inDir, numBatches)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.slidingCounts(stream)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(unix_millis(col("w_start")).as("w_start_ms"),
-        col("event_type"), col("n"))
-      .orderBy(col("w_start_ms"), col("event_type"))
-  }
+      numBatches: Int, slicing: Slicing, tag: String): DataFrame =
+    replay(s, s"stream_sliding$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, orderedEvents(s, dir).withColumn("_b", slicing.bCol(numBatches)),
+        in, numBatches)
+    } { case Seq(ev) => StreamOps.slidingCounts(ev) } { out =>
+      s.read.parquet(out)
+        .select(unix_millis(col("w_start")).as("w_start_ms"),
+          col("event_type"), col("n"))
+        .orderBy(col("w_start_ms"), col("event_type"))
+    }
 
   val streamSlidingParitySql: String =
     streamSlidingParityOracleSql(NumBatches, SliceHashMod)
@@ -787,32 +756,18 @@ object StreamParity {
     * class of refutation the dedup fuzz recorded). The `streamord` fuzz
     * family therefore varies N here and the full slicing elsewhere. */
   private[graft] def streamSessionParityN(s: SparkSession, dir: String,
-      numBatches: Int, tag: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, s"stream_session$tag/in")
-    val outDir = freshDir(s, s"stream_session$tag/out")
-    val ckpt = freshDir(s, s"stream_session$tag/ckpt")
-    val ev = orderedEvents(s, dir)
-      .withColumn("_b", SliceTime.bCol(numBatches))
-    landOrdered(s, ev, inDir, numBatches)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.sessionCounts(stream)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("user_id"),
-        unix_millis(col("s_start")).as("s_start_ms"),
-        unix_millis(col("s_end")).as("s_end_ms"),
-        col("n_events"))
-      .orderBy(col("user_id"), col("s_start_ms"))
-  }
+      numBatches: Int, tag: String): DataFrame =
+    replay(s, s"stream_session$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, orderedEvents(s, dir).withColumn("_b", SliceTime.bCol(numBatches)),
+        in, numBatches)
+    } { case Seq(ev) => StreamOps.sessionCounts(ev) } { out =>
+      s.read.parquet(out)
+        .select(col("user_id"),
+          unix_millis(col("s_start")).as("s_start_ms"),
+          unix_millis(col("s_end")).as("s_end_ms"),
+          col("n_events"))
+        .orderBy(col("user_id"), col("s_start_ms"))
+    }
 
   val streamSessionParitySql: String =
     """WITH ev AS (
@@ -864,37 +819,24 @@ object StreamParity {
     * the TIME-ORDERED layout (salt = 0), where no original is ever late;
     * the salt parameter exists only so the refutation stays runnable. */
   private[graft] def streamDedupParityN(s: SparkSession, dir: String,
-      numBatches: Int, salt: Long, tag: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, s"stream_dedup$tag/in")
-    val outDir = freshDir(s, s"stream_dedup$tag/out")
-    val ckpt = freshDir(s, s"stream_dedup$tag/ckpt")
-    val wOrd = Window.orderBy(col("ts"), col("event_id"))
-    val based =
-      if (salt == 0L) orderedEvents(s, dir)
-        .withColumn("_b", (ntile(numBatches).over(wOrd) - 1).cast("int"))
-      else orderedEvents(s, dir)
-        .withColumn("_b", pmod(hash(col("event_id"), lit(salt)), lit(numBatches)))
-    val dups = based.filter(col("_b") < lit(numBatches - 1))
-      .withColumn("_b", col("_b") + lit(1))
-    landOrdered(s, based.unionByName(dups), inDir, numBatches)
-    val stream = s.readStream.schema(based.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.dedupStream(stream)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("event_id"), unix_millis(col("ts")).as("ts_ms"),
-        col("user_id"), col("event_type"),
-        col("value").cast("long").as("cents"))
-      .orderBy(col("event_id"))
-  }
+      numBatches: Int, salt: Long, tag: String): DataFrame =
+    replay(s, s"stream_dedup$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      val wOrd = Window.orderBy(col("ts"), col("event_id"))
+      val based =
+        if (salt == 0L) orderedEvents(s, dir)
+          .withColumn("_b", (ntile(numBatches).over(wOrd) - 1).cast("int"))
+        else orderedEvents(s, dir)
+          .withColumn("_b", pmod(hash(col("event_id"), lit(salt)), lit(numBatches)))
+      val dups = based.filter(col("_b") < lit(numBatches - 1))
+        .withColumn("_b", col("_b") + lit(1))
+      landOrdered(s, based.unionByName(dups), in, numBatches)
+    } { case Seq(ev) => StreamOps.dedupStream(ev) } { out =>
+      s.read.parquet(out)
+        .select(col("event_id"), unix_millis(col("ts")).as("ts_ms"),
+          col("user_id"), col("event_type"),
+          col("value").cast("long").as("cents"))
+        .orderBy(col("event_id"))
+    }
 
   val streamDedupParitySql: String =
     """SELECT event_id, epoch_ms(ts) AS ts_ms, user_id, event_type,
@@ -913,31 +855,20 @@ object StreamParity {
     * last + 45 d is always past the final watermark), so no state is
     * evicted mid-run. Readout = exact transition multiset with event-ms
     * keys, aggregated to unique rows. */
-  def streamTransitionsParity(s: SparkSession, dir: String): DataFrame = withStreamShuffle(s) {
+  def streamTransitionsParity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, "stream_transitions/in")
-    val outDir = freshDir(s, "stream_transitions/out")
-    val ckpt = freshDir(s, "stream_transitions/ckpt")
-    val wOrd = Window.orderBy(col("ts"), col("event_id"))
-    val ev = orderedEvents(s, dir)
-      .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int"))
-    landOrdered(s, ev, inDir, NumBatches)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.transitionsStream(stream.as[StreamOps.Event]).toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .groupBy(col("user_id"), col("from_event"), col("to_event"), col("ms"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("user_id"), col("ms"), col("from_event"), col("to_event"))
+    replay(s, "stream_transitions", OutputMode.Append, appendSink) { case Seq(in) =>
+      val wOrd = Window.orderBy(col("ts"), col("event_id"))
+      landOrdered(s, orderedEvents(s, dir)
+        .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int")), in, NumBatches)
+    } { case Seq(ev) =>
+      StreamOps.transitionsStream(ev.as[StreamOps.Event]).toDF()
+    } { out =>
+      s.read.parquet(out)
+        .groupBy(col("user_id"), col("from_event"), col("to_event"), col("ms"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("user_id"), col("ms"), col("from_event"), col("to_event"))
+    }
   }
 
   val streamTransitionsParitySql: String =
@@ -963,33 +894,22 @@ object StreamParity {
     * quartile slices concatenate to the fold's global order per user,
     * so the match set equals the batch as-of exactly; the oracle is the
     * IGNORE-NULLS running-last-click window. */
-  def streamAsofParity(s: SparkSession, dir: String): DataFrame = withStreamShuffle(s) {
+  def streamAsofParity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, "stream_asof/in")
-    val outDir = freshDir(s, "stream_asof/out")
-    val ckpt = freshDir(s, "stream_asof/ckpt")
-    val kind = when(col("event_type") === "click", 0).otherwise(1)
-    val wOrd = Window.orderBy(col("ts"), kind, col("event_id"))
-    val ev = orderedEvents(s, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int"))
-    landOrdered(s, ev, inDir, NumBatches)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.asofStream(stream.as[StreamOps.Event]).toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("purchase_id"),
-        col("last_click_id"), col("last_click_ms"))
-      .orderBy(col("purchase_id"))
+    replay(s, "stream_asof", OutputMode.Append, appendSink) { case Seq(in) =>
+      val kind = when(col("event_type") === "click", 0).otherwise(1)
+      val wOrd = Window.orderBy(col("ts"), kind, col("event_id"))
+      landOrdered(s, orderedEvents(s, dir)
+        .filter(col("event_type").isin("click", "purchase"))
+        .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int")), in, NumBatches)
+    } { case Seq(ev) =>
+      StreamOps.asofStream(ev.as[StreamOps.Event]).toDF()
+    } { out =>
+      s.read.parquet(out)
+        .select(col("user_id"), col("purchase_id"),
+          col("last_click_id"), col("last_click_ms"))
+        .orderBy(col("purchase_id"))
+    }
   }
 
   val streamAsofParitySql: String =
@@ -1087,34 +1007,22 @@ object StreamParity {
     * fuzz axis for the EVICTION-schedule model, mirroring what the
     * slicing axis does for the watermark model. */
   private[graft] def streamFunnelParityN(s: SparkSession, dir: String,
-      nb: Int, mod: Long, retMs: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      nb: Int, mod: Long, retMs: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_funnel$tag/in")
-    val outDir = freshDir(s, s"stream_funnel$tag/out")
-    val ckpt = freshDir(s, s"stream_funnel$tag/ckpt")
-    val ev = orderedEvents(s, dir)
-      .filter(col("event_type").isin(graft.queries.Behavioral.FunnelSteps: _*))
-      .filter(pmod(col("event_id"), lit(mod)) === 0)
-      .withColumn("_b", SliceTime.bCol(nb))
-    landOrdered(s, ev, inDir, nb)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.funnelStream(stream.as[StreamOps.Event],
+    replay(s, s"stream_funnel$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, orderedEvents(s, dir)
+        .filter(col("event_type").isin(graft.queries.Behavioral.FunnelSteps: _*))
+        .filter(pmod(col("event_id"), lit(mod)) === 0)
+        .withColumn("_b", SliceTime.bCol(nb)), in, nb)
+    } { case Seq(ev) =>
+      StreamOps.funnelStream(ev.as[StreamOps.Event],
         graft.queries.Behavioral.FunnelWindowMs,
-        java.time.Duration.ofMillis(retMs))
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("level"), col("t1"), col("t2"), col("t3"))
-      .orderBy(col("user_id"), col("level"), col("t1"), col("t2"), col("t3"))
+        java.time.Duration.ofMillis(retMs)).toDF()
+    } { out =>
+      s.read.parquet(out)
+        .select(col("user_id"), col("level"), col("t1"), col("t2"), col("t3"))
+        .orderBy(col("user_id"), col("level"), col("t1"), col("t2"), col("t3"))
+    }
   }
 
   /** The oracle replays the eviction schedule in SQL: episode breaks by
@@ -1190,33 +1098,21 @@ object StreamParity {
     streamTotalsParityN(s, dir, EpisodeBatches, 3L, EpisodeRetMs, "")
 
   private[graft] def streamTotalsParityN(s: SparkSession, dir: String,
-      nb: Int, mod: Long, retMs: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      nb: Int, mod: Long, retMs: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_totals$tag/in")
-    val outDir = freshDir(s, s"stream_totals$tag/out")
-    val ckpt = freshDir(s, s"stream_totals$tag/ckpt")
-    val ev = orderedEvents(s, dir)
-      .filter(pmod(col("event_id"), lit(mod)) === 0)
-      .withColumn("_b", SliceTime.bCol(nb))
-    landOrdered(s, ev, inDir, nb)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.runningTotals(stream.as[StreamOps.Event],
-        java.time.Duration.ofMillis(retMs))
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("n"),
-        col("total").cast("long").as("total_cents"))
-      .orderBy(col("user_id"), col("n"), col("total_cents"))
+    replay(s, s"stream_totals$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, orderedEvents(s, dir)
+        .filter(pmod(col("event_id"), lit(mod)) === 0)
+        .withColumn("_b", SliceTime.bCol(nb)), in, nb)
+    } { case Seq(ev) =>
+      StreamOps.runningTotals(ev.as[StreamOps.Event],
+        java.time.Duration.ofMillis(retMs)).toDF()
+    } { out =>
+      s.read.parquet(out)
+        .select(col("user_id"), col("n"),
+          col("total").cast("long").as("total_cents"))
+        .orderBy(col("user_id"), col("n"), col("total_cents"))
+    }
   }
 
   val streamTotalsParitySql: String =
@@ -1252,34 +1148,22 @@ object StreamParity {
     streamScd2ParityN(s, dir, EpisodeBatches, 3L, EpisodeRetMs, "")
 
   private[graft] def streamScd2ParityN(s: SparkSession, dir: String,
-      nb: Int, mod: Long, retMs: Long, tag: String): DataFrame = withStreamShuffle(s) {
+      nb: Int, mod: Long, retMs: Long, tag: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, s"stream_scd2$tag/in")
-    val outDir = freshDir(s, s"stream_scd2$tag/out")
-    val ckpt = freshDir(s, s"stream_scd2$tag/ckpt")
-    val ev = orderedEvents(s, dir)
-      .filter(pmod(col("event_id"), lit(mod)) === 0)
-      .withColumn("_b", SliceTime.bCol(nb))
-    landOrdered(s, ev, inDir, nb)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.scd2Stream(stream.as[StreamOps.Event],
-        java.time.Duration.ofMillis(retMs))
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("version"), col("attr"),
-        col("valid_from_ms"), col("valid_to_ms"), col("n_events"),
-        col("is_current"))
-      .orderBy(col("user_id"), col("valid_from_ms"), col("version"))
+    replay(s, s"stream_scd2$tag", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, orderedEvents(s, dir)
+        .filter(pmod(col("event_id"), lit(mod)) === 0)
+        .withColumn("_b", SliceTime.bCol(nb)), in, nb)
+    } { case Seq(ev) =>
+      StreamOps.scd2Stream(ev.as[StreamOps.Event],
+        java.time.Duration.ofMillis(retMs)).toDF()
+    } { out =>
+      s.read.parquet(out)
+        .select(col("user_id"), col("version"), col("attr"),
+          col("valid_from_ms"), col("valid_to_ms"), col("n_events"),
+          col("is_current"))
+        .orderBy(col("user_id"), col("valid_from_ms"), col("version"))
+    }
   }
 
   val streamScd2ParitySql: String =
@@ -1335,34 +1219,22 @@ object StreamParity {
     * 45-day default (no eviction: attribution's window discipline is
     * the state bound; the timeout twins above grade the eviction path).
     * The oracle is the plain interval join + rank split. */
-  def streamAttributionParity(s: SparkSession, dir: String): DataFrame = withStreamShuffle(s) {
+  def streamAttributionParity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val inDir = freshDir(s, "stream_attrib/in")
-    val outDir = freshDir(s, "stream_attrib/out")
-    val ckpt = freshDir(s, "stream_attrib/ckpt")
-    val kind = when(col("event_type") === "purchase", 1).otherwise(0)
-    val wOrd = Window.orderBy(col("ts"), kind, col("event_id"))
-    val ev = orderedEvents(s, dir)
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int"))
-    landOrdered(s, ev, inDir, NumBatches)
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.attributionStream(stream.as[StreamOps.Event])
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("p_id"), col("t_id"),
-        col("touch_type"), col("credit_milli"))
-      .orderBy(col("user_id"), col("p_id"), col("t_id"))
+    replay(s, "stream_attrib", OutputMode.Append, appendSink) { case Seq(in) =>
+      val kind = when(col("event_type") === "purchase", 1).otherwise(0)
+      val wOrd = Window.orderBy(col("ts"), kind, col("event_id"))
+      landOrdered(s, orderedEvents(s, dir)
+        .filter(col("event_type").isin("view", "click", "purchase"))
+        .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int")), in, NumBatches)
+    } { case Seq(ev) =>
+      StreamOps.attributionStream(ev.as[StreamOps.Event]).toDF()
+    } { out =>
+      s.read.parquet(out)
+        .select(col("user_id"), col("p_id"), col("t_id"),
+          col("touch_type"), col("credit_milli"))
+        .orderBy(col("user_id"), col("p_id"), col("t_id"))
+    }
   }
 
   val streamAttributionParitySql: String = {
@@ -1407,38 +1279,22 @@ object StreamParity {
     * emit exactly once on arrival, and Spark's conservative state
     * retention (or the min-of-both-watermarks policy) can only keep
     * MORE state — never changing the match set. */
-  def streamJoinParity(s: SparkSession, dir: String): DataFrame = withStreamShuffle(s) {
-    val impDir = freshDir(s, "stream_join/imp")
-    val clkDir = freshDir(s, "stream_join/clk")
-    val outDir = freshDir(s, "stream_join/out")
-    val ckpt = freshDir(s, "stream_join/ckpt")
-    val wOrd = Window.orderBy(col("ts"), col("event_id"))
-    val ev = orderedEvents(s, dir)
-      .filter(col("event_type").isin("view", "click"))
-      .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int"))
-    landOrdered(s, ev.filter(col("event_type") === "view"), impDir, NumBatches)
-    landOrdered(s, ev.filter(col("event_type") === "click"), clkDir, NumBatches)
-    val schema = ev.drop("_b").schema
-    val imps = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(impDir)
-    val clks = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(clkDir)
-    val q = StreamOps.impressionClickJoin(imps, clks)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("imp_id"), col("click_id"), col("user_id"),
-        unix_millis(col("imp_ts")).as("imp_ms"),
-        unix_millis(col("click_ts")).as("click_ms"))
-      .orderBy(col("imp_id"), col("click_id"))
-  }
+  def streamJoinParity(s: SparkSession, dir: String): DataFrame =
+    replay(s, "stream_join", OutputMode.Append, appendSink,
+        inputs = Seq("imp", "clk")) { case Seq(imp, clk) =>
+      val wOrd = Window.orderBy(col("ts"), col("event_id"))
+      val ev = orderedEvents(s, dir)
+        .filter(col("event_type").isin("view", "click"))
+        .withColumn("_b", (ntile(NumBatches).over(wOrd) - 1).cast("int"))
+      landOrdered(s, ev.filter(col("event_type") === "view"), imp, NumBatches)
+      landOrdered(s, ev.filter(col("event_type") === "click"), clk, NumBatches)
+    } { case Seq(imps, clks) => StreamOps.impressionClickJoin(imps, clks) } { out =>
+      s.read.parquet(out)
+        .select(col("imp_id"), col("click_id"), col("user_id"),
+          unix_millis(col("imp_ts")).as("imp_ms"),
+          unix_millis(col("click_ts")).as("click_ms"))
+        .orderBy(col("imp_id"), col("click_id"))
+    }
 
   val streamJoinParitySql: String =
     """WITH e AS (
@@ -1461,33 +1317,23 @@ object StreamParity {
     * deterministically from the fixture (user_id % 4, with residue 3
     * absent so the left-outer 'unknown' path is exercised on real
     * rows). */
-  def streamEnrichParity(s: SparkSession, dir: String): DataFrame = withStreamShuffle(s) {
-    val inDir = freshDir(s, "stream_enrich/in")
-    val outDir = freshDir(s, "stream_enrich/out")
-    val ckpt = freshDir(s, "stream_enrich/ckpt")
+  def streamEnrichParity(s: SparkSession, dir: String): DataFrame = {
     val ev = orderedEvents(s, dir)
       .withColumn("_b", SliceHashMod.bCol(NumBatches))
-    landOrdered(s, ev, inDir, NumBatches)
-    val dim = ev.select(col("user_id")).distinct()
-      .filter(pmod(col("user_id"), lit(4L)) =!= 3)
-      .withColumn("segment",
-        concat(lit("seg"), pmod(col("user_id"), lit(4L))))
-    val stream = s.readStream.schema(ev.drop("_b").schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamOps.enrichWithDim(stream, dim)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value").cast("long").as("cents"), col("segment"))
-      .orderBy(col("event_id"))
+    replay(s, "stream_enrich", OutputMode.Append, appendSink) { case Seq(in) =>
+      landOrdered(s, ev, in, NumBatches)
+    } { case Seq(stream) =>
+      val dim = ev.select(col("user_id")).distinct()
+        .filter(pmod(col("user_id"), lit(4L)) =!= 3)
+        .withColumn("segment",
+          concat(lit("seg"), pmod(col("user_id"), lit(4L))))
+      StreamOps.enrichWithDim(stream, dim)
+    } { out =>
+      s.read.parquet(out)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value").cast("long").as("cents"), col("segment"))
+        .orderBy(col("event_id"))
+    }
   }
 
   val streamEnrichParitySql: String =
