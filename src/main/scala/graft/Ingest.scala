@@ -121,14 +121,8 @@ object Ingest {
 
   def main(args: Array[String]): Unit = {
     val c = parse(args.toIndexedSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(GraftSession.cpus)
       .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, c) finally spark.stop()

@@ -239,18 +239,9 @@ object GraphOps {
     * Lineage.truncate discipline as before — per-QUERY results are
     * unchanged, only the rebuild disappears. */
   private[graft] case class CoTables(pairs: DataFrame, und: DataFrame,
-      deg: DataFrame, se: DataFrame, rddIds: Set[Int],
-      buildSec: Double = 0.0, dir: String = "")
+      deg: DataFrame, se: DataFrame)
 
   private[graft] def coTablesOf(membership: DataFrame): CoTables = {
-    // snapshot the persisted-RDD set around the build: the delta is the
-    // cache entry's OWN checkpoint blocks, which (a) lets a cache hit
-    // verify its blocks still exist (lineage is truncated — an
-    // unpersisted entry cannot recompute, it must REBUILD) and (b) lets
-    // the bench's per-query unpersist spare exactly these ids
-    val sc = membership.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val t0 = System.nanoTime()
     val li = Lineage.truncate(cappedMembership(membership))
     val pairs = Lineage.truncate(
       li.as("x").join(li.as("y"),
@@ -265,80 +256,28 @@ object GraphOps {
     // walks loops evaluate their base edge set several times per round
     val se = Lineage.truncate(
       pairs.filter(col("w") >= Cores.MinSupport).select(col("a"), col("b")))
-    val after = sc.getPersistentRDDs.keySet.toSet
-    CoTables(pairs, und, deg, se, after -- before,
-      (System.nanoTime() - t0) / 1e9)
+    CoTables(pairs, und, deg, se)
   }
 
-  private val coCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CoTables]()
+  /** The shared projection of the standard lineitem membership at each
+    * source dir. Spec-scoped sessions with custom memberships use
+    * [[coTablesOf]] directly and never share. */
+  private val shared = new SharedTables[CoTables]((s, dir) =>
+    coTablesOf(s.read.parquet(s"$dir/lineitem.parquet")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))))
 
-  /** Cache hygiene (ADVICE r14): drop entries whose owning session is
-    * stopped, and unpersist a replaced entry's still-live checkpoint
-    * blocks — without this, long multi-session processes (spec suites,
-    * fuzz loops) leak persisted blocks and map entries forever. */
-  private def pruneCoCache(): Unit = {
-    import scala.jdk.CollectionConverters._
-    coCache.entrySet().asScala
-      .filter(_.getValue.und.sparkSession.sparkContext.isStopped)
-      .map(_.getKey).toSeq.foreach(coCache.remove)
-  }
-
-  private def unpersistCoTables(t: CoTables): Unit = {
-    val sc = t.und.sparkSession.sparkContext
-    if (!sc.isStopped) t.rddIds.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Cached projection for the standard lineitem membership at `dir`.
-    * A hit must pass TWO liveness checks: the session identity (a
-    * checkpointed frame is only valid on the session that built it) and
-    * block existence (a harness that unpersisted the blocks — e.g. a
-    * bench variant without the [[protectedRddIds]] carve-out — leaves a
-    * cache entry that can never recompute; rebuild instead of throwing
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Spec-scoped sessions with
-    * custom memberships use [[coTablesOf]] directly and never cache. */
-  private[graft] def coTables(s: SparkSession, dir: String): CoTables = {
-    pruneCoCache()
-    val key = System.identityHashCode(s) + ":" + dir
-    val hit = coCache.get(key)
-    val live = hit != null && (hit.und.sparkSession eq s) &&
-      hit.rddIds.subsetOf(s.sparkContext.getPersistentRDDs.keySet)
-    if (live) hit
-    else {
-      // a stale entry may still hold SOME live blocks (e.g. a partial
-      // unpersist): release them before the rebuild replaces the entry
-      if (hit != null) unpersistCoTables(hit)
-      val t = coTablesOf(s.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")))
-        .copy(dir = dir)
-      coCache.put(key, t)
-      t
-    }
-  }
+  private[graft] def coTables(s: SparkSession, dir: String): CoTables = shared(s, dir)
 
   /** RDD ids of this session's live shared projections — the bench's
     * per-query unpersist spares exactly these (bounded: one CoTables
     * per source dir), so the family sharing survives a sweep. */
-  private[graft] def protectedRddIds(s: SparkSession): Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    coCache.values.asScala
-      .filter(_.und.sparkSession eq s)
-      .flatMap(_.rddIds).toSet
-  }
+  private[graft] def protectedRddIds(s: SparkSession): Set[Int] = shared.rddIds(s)
 
   /** Shared-projection build seconds for this session, keyed by source
     * dir — surfaced by the bench as BENCH.out.json line items so the
-    * warmup-built sharing is visible in the artifact (r15 verdict
-    * What's-wrong #3). */
-  private[graft] def sharedBuildSeconds(s: SparkSession): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    coCache.values.asScala
-      .filter(_.und.sparkSession eq s)
-      .map(t => t.dir -> t.buildSec)
-      .toMap
-  }
+    * warmup-built sharing is visible in the artifact. */
+  private[graft] def sharedBuildSeconds(s: SparkSession): Map[String, Double] =
+    shared.buildSeconds(s)
 
   // ------------------------------------------------------------------
   // Triangle counting over the part co-occurrence graph — the third

@@ -12,7 +12,7 @@ import graft.types.U256Arith.{U256Add, U256Div, U256Mod, U256Mul, U256Sub}
   * registration for the u256 expression family, injected through the
   * standard SparkSessionExtensions hook:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions).…
+  *   GraftSession.builder(cpus).withExtensions(new GraftExtensions).…
   *   // or: spark.sql.extensions=graft.plans.GraftExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

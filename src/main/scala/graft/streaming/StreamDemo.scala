@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.GraftSession
 import graft.streaming.StreamOps.Event
 
 /** Runnable demo of the streaming surface: feeds a MemoryStream through
@@ -12,12 +12,7 @@ import graft.streaming.StreamOps.Event
   * end-to-end drive of the streaming operators outside tests. */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sq = spark.sqlContext

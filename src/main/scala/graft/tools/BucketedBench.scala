@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.Layout
 
 /** Measures the bucketed-layout amortization claim behind
@@ -23,14 +24,7 @@ object BucketedBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
     val blowup = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.cpus)
       // the A/B must compare bucketed-SMJ vs shuffled-SMJ, not vs a
       // broadcast that only exists because the fixture is small
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")

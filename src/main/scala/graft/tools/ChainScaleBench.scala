@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Scale-up measurement for the chain surface (SCALE.md): the full ETL
   * write path (extract→flatten→dedup→bucketed write, Load.ingest) and a
   * representative analytic bundle over the written warehouse (gas rollup,
@@ -56,14 +58,7 @@ object ChainScaleBench {
 
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(1000L, 5000L, 10000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def rm(path: String): Unit = {
       val (fs, p) = graft.etl.WarehouseFs.resolve(spark, path)

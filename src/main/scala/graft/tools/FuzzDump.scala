@@ -4,9 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+
+import graft.GraftSession
 
 /** Randomized differential testing of the engine against DuckDB: a
   * seeded generator builds N random scan→filter→group→aggregate→sort
@@ -843,15 +845,7 @@ object FuzzDump {
     val n = if (args.length > 2) args(2).toInt else 20
     val seed = if (args.length > 3) args(3).toLong else 42L
     val family = if (args.length > 4) Some(args(4)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     locally {

@@ -3,9 +3,10 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.GraphOps
 
 /** Scale-up measurement for the graph kernels (VERDICT r9 item 7): the
@@ -47,19 +48,14 @@ object GraphScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus)
       // the 100 TB knob under test: per-partition hash-table/sort size
       // scales with |E|/partitions, so the blow-up factors need a
       // matching partition override to measure the ALGORITHM rather
       // than single-JVM memory pressure (A/B recorded in SCALE.md)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val meter = new ShuffleMeter

@@ -3,9 +3,8 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Per-JOB wall-clock breakdown of a registered query — the measure-first
   * tool the optimization guide (§1) asks for: a multi-second query here is
@@ -56,15 +55,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val names = args.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     names.foreach { name =>

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Measured comparison of the three answers to a skewed equi-join
   * (SCALE.md): (a) static plan, AQE off — the degenerate baseline where
   * one task owns the hot key; (b) AQE skew-join split at runtime;
@@ -31,12 +33,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val rows = if (args.length > 0) args(0).toLong else 5000000L
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus)
       // force the shuffle join: broadcasting the dim would erase the skew
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()

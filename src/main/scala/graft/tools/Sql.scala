@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Interactive SQL entry point: every table a user of the engine would
   * query — the TPC-H-ish star schema + events/documents/embeddings from
   * a scale dir AND the four flattened chain tables from the fixture
@@ -36,14 +38,7 @@ object Sql {
     val sql = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val maxRows = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.cpus)
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.ops.{Clustering, TrainedIvf}
 
 /** SCALE.md table: recall@10 / scanned fraction / probe-batch QPS by
@@ -13,14 +12,7 @@ object TrainedIvfBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nprobes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 4, 8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     val k = Clustering.kFor(n)

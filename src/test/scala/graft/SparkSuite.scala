@@ -3,18 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite; UTC + small shuffle width. */
+/** One shared local session per suite, built with the production confs
+  * ([[GraftSession]]) at the width PlanStats pins plans on. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.optimizer.excludedRules",
-      graft.ops.Windows.KeepConstPartitionKeysRule)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("4").appName("graft-test").getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
 }
