@@ -243,7 +243,7 @@ object DedupOps {
   // NumPerms affine evaluations — the Li/Owen/Zhang 2012 estimator with
   // Shrivastava-Li rotation densification. Same LSH guarantee (slot
   // collision ≈ Jaccard), measurably cheaper signature pass (A/B in
-  // SCALE.md round 10 via tools.SigBench), and the exact-verify tail
+  // SCALE.md round 10; ScaleBench sig), and the exact-verify tail
   // makes the OUTPUT semantics identical in kind: candidate recall may
   // differ per band draw, but every emitted pair is exact-Jaccard ≥ 0.5.
   val OphBins: Int = NumPerms // same width -> banding arithmetic reused
@@ -407,7 +407,7 @@ object DedupOps {
   }
 
   /** Pairs where `a` or `b` is in `ids` — the delta-slice filter shared
-    * by the incremental path and IncrementalBench's full-rerun slice
+    * by the incremental path and ScaleBench incremental's full-rerun slice
     * (one definition, so the two sides can never diverge). `ids` is
     * expected delta-sized → broadcast. */
   private[graft] def pairsInvolving(cand: DataFrame, ids: DataFrame): DataFrame =

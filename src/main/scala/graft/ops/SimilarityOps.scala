@@ -65,7 +65,7 @@ object SimilarityOps {
     * are exactly representable as floats, so widening matches the
     * oracle's double math bit-for-bit), not bits×dim hash calls (the
     * hash-per-row form measured 2.7× slower at 100k rows,
-    * CrossoverBench). */
+    * ScaleBench crossover). */
   def lshBucket(v: Column, bits: Int, seed: Int = 0, dim: Int = 64): Column =
     lshWeights(bits, seed, dim).zipWithIndex.map { case (ws, i) =>
       val weights = array(ws.map(w => lit(w.toFloat)): _*)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Recall/cost instrumentation for IVF over TRAINED k-means cells (the
   * index-build shape a production ANN deployment persists): shared by
   * the OpsSpec curve assertions (sf0.001 and sf0.1) and the
-  * graft.tools.TrainedIvfBench table in SCALE.md. `nprobe` is the
+  * `ScaleBench ivf` table in SCALE.md. `nprobe` is the
   * recall-vs-cost dial: scan cost grows ~linearly with probed cells
   * while recall saturates.
   */

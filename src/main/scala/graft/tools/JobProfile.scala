@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler._
 
 import graft.{GraftSession, SparkEntry}
@@ -70,14 +71,8 @@ object JobProfile {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val total = (System.nanoTime() - t0) / 1e9
-      // listener events are async: poll until every started job has ended
-      // (bounded wait — the query's jobs are all complete by now)
-      locally {
-        import scala.jdk.CollectionConverters._
-        val deadline = System.nanoTime() + 3000000000L
-        while (probe.jobs.values.asScala.exists(_.t1 == 0L) &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      }
+      // listener events are async: deliver every one posted so far
+      ListenerDrain.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(probe)
       import scala.jdk.CollectionConverters._
       val js = probe.jobs.values.asScala.toSeq.sortBy(_.t0)
