@@ -1,5 +1,10 @@
 package graft
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
+
+import graft.ops.SharedTables
+import graft.tools.Probe
 object Bench {
 
   /** r16 (VERDICT r15 item 2): the one-line stdout JSON now carries the
@@ -13,12 +18,27 @@ object Bench {
     * renamed, so the next round-over-round diff sees n_common ≈ the full
     * registry instead of 14. */
 
-  /** RDD ids of the session's family-shared materializations (graph
-    * CoTables + dedup DupTables) — the per-query unpersist spares
-    * exactly these so the sharing survives the sweep. */
-  private[graft] def protectedIds(s: SparkSession): Set[Int] =
-    graft.ops.GraphOps.protectedRddIds(s) ++
-      graft.ops.DedupOps.protectedRddIds(s)
+  /** One rep of one query, as the sweep runs it: from an empty cache,
+    * `count()` timed, giving (rows, seconds). A rep that throws gives no
+    * sample, since its short wall time would read as fast; NonFatal only,
+    * so an OOM or a dead context aborts the caller as one failure instead
+    * of bleeding through as one bogus failure per query.
+    *
+    * Afterwards every persisted RDD is released except the family-shared
+    * tables (graph CoTables, dedup DupTables): a consumed result does not
+    * need its lineage-truncation blocks, and without the release they
+    * build up across reps. The shared tables are materialized once per
+    * sweep, bounded (one per source dir) and reused by every family
+    * member; releasing them made every later graph query throw
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (r14). */
+  private[graft] def rep(spark: SparkSession, sfDir: String,
+      fn: Probe.Query): Try[(Long, Double)] = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    val r = Try { val n = fn(spark, sfDir).count(); (n, (System.nanoTime() - t0) / 1e9) }
+    SharedTables.release(spark)
+    r
+  }
 
   /** Named build-seconds line items for every shared table this session
     * materialized during the (untimed) warmup — "family:source dir" →
@@ -41,36 +61,38 @@ object Bench {
   private[graft] def confirmCandidates(ratios: Seq[(String, Double)]): Seq[String] =
     ratios.filter(_._2 > ConfirmThreshold).map(_._1).sorted
 
-  /** Parse the `[time-json]` lines a forked [[tools.TimeQuery]] prints —
+  /** Parse the `[time-json]` lines a forked [[tools.Probe]] `time` prints —
     * name → best-of-reps seconds. Non-matching lines (Spark log noise on
     * the merged stream) are skipped; a malformed payload is dropped, not
     * fatal (a missing confirmation must not fail the bench). */
   private[graft] def parseTimeJson(lines: Seq[String]): Map[String, Double] =
     lines.flatMap { l =>
-      val i = l.indexOf(tools.TimeQuery.JsonTag)
+      val i = l.indexOf(Probe.JsonTag)
       if (i < 0) None
       else try {
         val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(l.substring(i + tools.TimeQuery.JsonTag.length))
+          .readTree(l.substring(i + Probe.JsonTag.length))
         Some(node.get("name").asText() -> node.get("best").asDouble())
       } catch { case scala.util.control.NonFatal(_) => None }
     }.toMap
 
   /** Isolated fresh-JVM best-of-3 for `names`: forks `java` with THIS
     * JVM's exact flags (add-opens, heap, code cache) and classpath
-    * running [[tools.TimeQuery]] — a genuinely separate process outside
-    * the sweep's scheduler/GC context, the same regime baselines use.
-    * Bounded: only outlier queries, one fork total. Failure → empty map
-    * (the raw ratios stand, conservatively). */
-  private def freshJvmBest(names: Seq[String], sfDir: String): Map[String, Double] = {
+    * running `Probe time 3` — a genuinely separate process outside the
+    * sweep's scheduler/GC context, the same regime baselines use, timed
+    * with the sweep's own [[rep]]. Bounded: only outlier queries, one
+    * fork total. Failure → empty map (the raw ratios stand,
+    * conservatively). */
+  private[graft] def freshJvmBest(names: Seq[String], sfDir: String): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
+    val probe = Probe.getClass.getName.stripSuffix("$")
     val cmd = Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.tools.TimeQuery", "3") ++ names
+      Seq("-cp", System.getProperty("java.class.path"), probe, "time", "3") ++ names
     val pb = new ProcessBuilder(cmd.asJava)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
     pb.redirectErrorStream(true)
@@ -92,7 +114,7 @@ object Bench {
     val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The sweep deliberately unpersists consumed localCheckpoint blocks
-    // after every query (see timeOne), and each unpersist logs a WARN
+    // after every query (see rep), and each unpersist logs a WARN
     // that the truncated lineage "cannot be recomputed" — true and
     // intended (the result was already counted). Silence the rdd
     // loggers so a REAL warning still stands out in the bench tail.
@@ -118,24 +140,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    for ((name, fn) <- names) {
-      spark.catalog.clearCache()
-      try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-      // consumed results don't need their lineage-truncation blocks:
-      // drop them so block-manager state can't build up across the sweep.
-      // EXCEPT the family-shared projections (GraphOps.CoTables): those
-      // are deliberately materialized ONCE per sweep — bounded (one per
-      // source dir) and reused by nine kernels — so the cleanup spares
-      // their ids (r14; unpersisting them made every later graph query
-      // throw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND: truncated lineage
-      // cannot recompute)
-      locally {
-        val keep = protectedIds(spark)
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!keep(id)) rdd.unpersist(blocking = false)
-        }
-      }
-    }
+    for ((_, fn) <- names) rep(spark, sfDir, fn)
     var failed = List.empty[String]
     // Cold best-of-N per query: the shared-VM host's CPU throughput swings
     // up to ~2.5x between single runs (SCALE.md), so one sample per query
@@ -155,27 +160,12 @@ object Bench {
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg")).trim
       catch { case scala.util.control.NonFatal(_) => "" }
     val repLoads = scala.collection.mutable.ListBuffer.empty[String]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      // A rep that throws must not contribute its (near-zero) duration —
-      // min over SUCCESSFUL reps only; all-failed queries report -1.
-      // NonFatal: an OOM/dead-context must abort the bench as ONE fatal
-      // failure, not bleed through the sweep as N bogus per-query fails
-      val ok =
-        try { fn(spark, sfDir).count(); true } catch {
-          case scala.util.control.NonFatal(e) =>
-            if (!failed.contains(name)) failed ::= name
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-        }
-      if (ok) samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples(name)
-      locally { // spare the shared projections (see the warmup note)
-        val keep = protectedIds(spark)
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!keep(id)) rdd.unpersist(blocking = false)
-        }
-      }
+    // min over successful reps only: a failed rep is no sample
+    def timeOne(name: String, fn: Probe.Query): Unit = rep(spark, sfDir, fn) match {
+      case Success((_, t)) => samples(name) = t :: samples(name)
+      case Failure(e) =>
+        if (!failed.contains(name)) failed ::= name
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
     }
     for (r <- 1 to reps) {
       repLoads += loadavg()

@@ -319,9 +319,9 @@ object DedupOps {
 
   private[graft] def dupTables(s: SparkSession, dir: String): DupTables = shared(s, dir)
 
-  /** RDD ids of this session's live shared tables — the bench's
-    * per-query unpersist spares exactly these (bounded: one DupTables
-    * per source dir), so the family sharing survives a sweep. */
+  /** RDD ids of the live shared tables on this session's context — the
+    * bench's per-query unpersist spares exactly these (bounded: one
+    * DupTables per source dir), so the family sharing survives a sweep. */
   private[graft] def protectedRddIds(s: SparkSession): Set[Int] = shared.rddIds(s)
 
   /** Shared-table build seconds for this session, keyed by source dir —

@@ -268,9 +268,9 @@ object GraphOps {
 
   private[graft] def coTables(s: SparkSession, dir: String): CoTables = shared(s, dir)
 
-  /** RDD ids of this session's live shared projections — the bench's
-    * per-query unpersist spares exactly these (bounded: one CoTables
-    * per source dir), so the family sharing survives a sweep. */
+  /** RDD ids of the live shared projections on this session's context —
+    * the bench's per-query unpersist spares exactly these (bounded: one
+    * CoTables per source dir), so the family sharing survives a sweep. */
   private[graft] def protectedRddIds(s: SparkSession): Set[Int] = shared.rddIds(s)
 
   /** Shared-projection build seconds for this session, keyed by source

@@ -49,9 +49,9 @@ object IncrementalMv {
     * dir it sees (tasks × partitions small files), and on the AQE-
     * coalesced single-task aggregates the write serializes ~80
     * sequential file creations (measured 1.4-2.2 s per write in the mv
-    * family's JobProfile). The explicit numPartitions (the session's
-    * shuffle parallelism, driver-sized via SPARK_GRAFT_CPUS) stops AQE
-    * re-coalescing the tiny fixture back to one writer task.
+    * family's `Probe jobs` profile). The explicit numPartitions (the
+    * session's shuffle parallelism, driver-sized via SPARK_GRAFT_CPUS)
+    * stops AQE re-coalescing the tiny fixture back to one writer task.
     *
     * 100 TB note (ADVICE r15): clustering by the partition column ALONE
     * serializes a hot partition's whole write through one task. At that

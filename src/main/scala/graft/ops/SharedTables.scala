@@ -46,8 +46,15 @@ private[graft] final class SharedTables[T](build: (SparkSession, String) => T) {
       }).tables
   }
 
-  /** RDD ids of this session's live entries. */
-  def rddIds(s: SparkSession): Set[Int] = of(s).flatMap(_.rddIds).toSet
+  /** RDD ids of the live entries on this session's context: blocks
+    * belong to the context, so a release from any of its sessions must
+    * spare every session's tables. */
+  def rddIds(s: SparkSession): Set[Int] = {
+    val live = persisted(s)
+    entries.values.asScala
+      .filter(e => (e.session.sparkContext eq s.sparkContext) && e.rddIds.subsetOf(live))
+      .flatMap(_.rddIds).toSet
+  }
 
   /** Build seconds of this session's entries, keyed by source dir. */
   def buildSeconds(s: SparkSession): Map[String, Double] =
@@ -62,5 +69,21 @@ private[graft] final class SharedTables[T](build: (SparkSession, String) => T) {
   private def release(e: Entry): Unit = {
     val sc = e.session.sparkContext
     e.rddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+  }
+}
+
+private[graft] object SharedTables {
+
+  /** RDD ids of every family's shared tables on this session's context. */
+  def protectedIds(s: SparkSession): Set[Int] =
+    GraphOps.protectedRddIds(s) ++ DedupOps.protectedRddIds(s)
+
+  /** Unpersists every RDD persisted on this session's context except
+    * `keep` and the shared tables. */
+  def release(s: SparkSession, keep: Set[Int] = Set.empty): Unit = {
+    val spare = keep ++ protectedIds(s)
+    s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!spare(id)) rdd.unpersist(blocking = false)
+    }
   }
 }

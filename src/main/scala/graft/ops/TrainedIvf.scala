@@ -18,7 +18,14 @@ object TrainedIvf {
     * unequal), and the probe-batch throughput. */
   case class Point(nprobe: Int, recall: Double, scanned: Double, qps: Double)
 
+  /** Every block the curve localCheckpoints is released before it
+    * returns: the points are plain values, nothing reads them later. */
   def curve(s: SparkSession, dir: String, nprobes: Seq[Int]): Seq[Point] = {
+    val before = s.sparkContext.getPersistentRDDs.keySet.toSet
+    try points(s, dir, nprobes) finally SharedTables.release(s, keep = before)
+  }
+
+  private def points(s: SparkSession, dir: String, nprobes: Seq[Int]): Seq[Point] = {
     import s.implicits._
     val emb = s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))

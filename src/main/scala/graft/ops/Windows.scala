@@ -22,7 +22,7 @@ private[graft] object Windows {
     * does): Catalyst's `EliminateWindowPartitions` otherwise folds the
     * literal key back to an empty partition spec. The results are the
     * same either way, the plans are not: with the exclusion some
-    * queries plan more exchanges (PlanStats: events_cusum 14 vs 9).
+    * queries plan more exchanges (`Probe plan`: events_cusum 14 vs 9).
     */
   def boundedGlobal(order: Column*): WindowSpec =
     Window.partitionBy(lit(0)).orderBy(order: _*)

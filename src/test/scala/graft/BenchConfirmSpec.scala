@@ -20,14 +20,14 @@ class BenchConfirmSpec extends AnyFunSuite {
     assert(Bench.ConfirmThreshold == 1.3)
   }
 
-  test("TimeQuery json line roundtrips through parseTimeJson; noise is skipped") {
+  test("Probe json line roundtrips through parseTimeJson; noise is skipped") {
     val lines = Seq(
       "22:35:23 WARN NativeCodeLoader: log noise",
-      tools.TimeQuery.jsonLine("media_audio_neardup", 0.7234),
+      tools.Probe.jsonLine("media_audio_neardup", 0.7234),
       "[time] media_audio_neardup best=0.72s rows=5 all=[0.72]",
-      tools.TimeQuery.jsonLine("graph_ppr", 2.891),
+      tools.Probe.jsonLine("graph_ppr", 2.891),
       "{\"name\":\"untagged\",\"best\":9.9}", // no tag -> ignored
-      tools.TimeQuery.JsonTag + "{malformed") // tagged but broken -> dropped
+      tools.Probe.JsonTag + "{malformed") // tagged but broken -> dropped
     val parsed = Bench.parseTimeJson(lines)
     assert(parsed == Map("media_audio_neardup" -> 0.723, "graph_ppr" -> 2.891))
   }

@@ -18,7 +18,7 @@ class DupTablesCacheSpec extends SparkSuite {
 
   test("bench-style selective unpersist spares the shared dup tables") {
     val n1 = DedupOps.minhashDedup(spark, dir).count() // builds + caches
-    val keep = Bench.protectedIds(spark)
+    val keep = graft.ops.SharedTables.protectedIds(spark)
     assert(DedupOps.protectedRddIds(spark).nonEmpty,
       "the cache must register its checkpoint blocks")
     assert(DedupOps.protectedRddIds(spark).subsetOf(keep),

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every session the engine builds carries one conf set: a confirmation
-  * fork (TimeQuery), a profile (JobProfile) or a plan pin (PlanStats)
+  * fork, a job profile or a plan pin (`Probe time`, `jobs`, `plan`)
   * that plans differently from the sweep it stands in for measures
   * something else. */
 class GraftSessionSpec extends AnyFunSuite {

@@ -508,7 +508,10 @@ class OpsSpec extends SparkSuite {
   }
 
   test("IVF over trained k-means cells bows above the random-label diagonal") {
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val curve = graft.ops.TrainedIvf.curve(spark, sf, Seq(1, 2, 4))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "curve must release every block it checkpointed")
     info("kmeans-cell IVF: " + curve.map(p =>
       f"nprobe=${p.nprobe} recall=${p.recall}%.3f scanned=${p.scanned}%.3f").mkString("; "))
     // random-label cells gave recall ≈ scanned fraction (the diagonal,

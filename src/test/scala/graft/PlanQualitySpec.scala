@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec, SortMergeJoinExec}
+
+import graft.PlanQualitySpec.PinnedShuffles
+import graft.tools.Probe.planNodes
 
 /** Structural scale guard: builds (without executing) the physical plan
   * of every registered query and rejects accidental cartesian products —
@@ -29,21 +30,13 @@ class PlanQualitySpec extends SparkSuite {
     // sampling audit: seven 1-row count aggregates crossed into one row
     "sample_universe_join")
 
-  private def collectPlans(p: SparkPlan): Seq[SparkPlan] = {
-    val inner = p match {
-      case a: AdaptiveSparkPlanExec => collectPlans(a.initialPlan)
-      case _ => Seq.empty
-    }
-    (p +: p.children.flatMap(collectPlans)) ++ inner
-  }
-
   test("no registered query plans a cartesian product (except 1-row summaries)") {
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(oneRowCrossWhitelist)
       .filterNot(_ == "chain_ingest_1k") // executes a write on plan build
       .flatMap { name =>
         val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
-        if (collectPlans(plan).exists(_.isInstanceOf[CartesianProductExec]))
+        if (planNodes(plan).exists(_.isInstanceOf[CartesianProductExec]))
           Some(name)
         else None
       }
@@ -54,14 +47,61 @@ class PlanQualitySpec extends SparkSuite {
   // Shuffle-count pinning (VERDICT r5 item 4): an accidental extra
   // exchange now fails CI the way a cartesian does. Counts are the
   // pre-AQE physical plan's ShuffleExchangeExec nodes at the spec's sf;
-  // refresh deliberately via `runMain graft.tools.PlanStats` after an
-  // intentional plan change.
+  // refresh deliberately via `SPARK_GRAFT_CPUS=4
+  // SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 runMain graft.tools.Probe
+  // plan` after an intentional plan change.
 
   private def shuffleCount(name: String): Int =
-    collectPlans(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+    planNodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
       .count(_.isInstanceOf[ShuffleExchangeExec])
 
-  private val PinnedShuffles = Map(
+  test("headline queries plan exactly their pinned shuffle counts") {
+    val drift = PinnedShuffles.keys.toSeq.sorted
+      .map(n => (n, shuffleCount(n), PinnedShuffles(n)))
+      .filter { case (_, got, want) => got != want }
+    assert(drift.isEmpty,
+      s"shuffle-count drift (name, got, pinned): $drift — if the plan change " +
+        "is deliberate, refresh the pins via SPARK_GRAFT_CPUS=4 " +
+        "SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 runMain graft.tools.Probe plan")
+  }
+
+  test("join strategy is pinned: q03 broadcasts all three dims, q04 degrades to sort-merge, never cartesian") {
+    val p3 = planNodes(
+      SparkEntry.queries("q03_join_broadcast")(spark, sf).queryExecution.executedPlan)
+    assert(p3.count(_.isInstanceOf[BroadcastHashJoinExec]) == 3,
+      "q03 must broadcast its three dimension joins")
+    assert(!p3.exists(_.isInstanceOf[SortMergeJoinExec]),
+      "q03 must not shuffle-join a broadcastable dim")
+    // q04 is the big-big join: broadcastable at this tiny sf, but with
+    // broadcast off (the 100 TB regime, where neither side fits) it must
+    // degrade to a shuffle join on the key — never a cartesian
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(thresholdKey)
+    try {
+      spark.conf.set(thresholdKey, "-1")
+      val p4 = planNodes(
+        SparkEntry.queries("q04_join_shuffle")(spark, sf).queryExecution.executedPlan)
+      assert(p4.exists(_.isInstanceOf[SortMergeJoinExec]),
+        "q04 with broadcast disabled must plan a sort-merge join")
+      assert(!p4.exists(_.isInstanceOf[CartesianProductExec]))
+    } finally spark.conf.set(thresholdKey, old)
+  }
+
+  test("the pin actually catches a de-optimized plan (extra repartition = extra exchange)") {
+    val pinned = PinnedShuffles("q01_pricing_summary")
+    val deoptimized = planNodes(
+      SparkEntry.queries("q01_pricing_summary")(spark, sf)
+        .repartition(64) // the accidental-extra-shuffle a refactor could add
+        .queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(deoptimized > pinned,
+      "an extra repartition must register as shuffle-count drift")
+  }
+}
+
+object PlanQualitySpec {
+
+  val PinnedShuffles = Map(
     "q01_pricing_summary" -> 2, // groupBy + orderBy
     "q03_join_broadcast" -> 2, // dims broadcast: only agg + sort shuffle
     "q04_join_shuffle" -> 3,
@@ -422,46 +462,4 @@ class PlanQualitySpec extends SparkSuite {
     // family-shared CoTables); visible plan is the community-degree
     // agg and the two 1-row stat aggs; labels join as broadcasts.
     "graph_modularity" -> 3)
-
-  test("headline queries plan exactly their pinned shuffle counts") {
-    val drift = PinnedShuffles.keys.toSeq.sorted
-      .map(n => (n, shuffleCount(n), PinnedShuffles(n)))
-      .filter { case (_, got, want) => got != want }
-    assert(drift.isEmpty,
-      s"shuffle-count drift (name, got, pinned): $drift — if the plan change " +
-        "is deliberate, refresh the pins via runMain graft.tools.PlanStats")
-  }
-
-  test("join strategy is pinned: q03 broadcasts all three dims, q04 degrades to sort-merge, never cartesian") {
-    val p3 = collectPlans(
-      SparkEntry.queries("q03_join_broadcast")(spark, sf).queryExecution.executedPlan)
-    assert(p3.count(_.isInstanceOf[BroadcastHashJoinExec]) == 3,
-      "q03 must broadcast its three dimension joins")
-    assert(!p3.exists(_.isInstanceOf[SortMergeJoinExec]),
-      "q03 must not shuffle-join a broadcastable dim")
-    // q04 is the big-big join: broadcastable at this tiny sf, but with
-    // broadcast off (the 100 TB regime, where neither side fits) it must
-    // degrade to a shuffle join on the key — never a cartesian
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(thresholdKey)
-    try {
-      spark.conf.set(thresholdKey, "-1")
-      val p4 = collectPlans(
-        SparkEntry.queries("q04_join_shuffle")(spark, sf).queryExecution.executedPlan)
-      assert(p4.exists(_.isInstanceOf[SortMergeJoinExec]),
-        "q04 with broadcast disabled must plan a sort-merge join")
-      assert(!p4.exists(_.isInstanceOf[CartesianProductExec]))
-    } finally spark.conf.set(thresholdKey, old)
-  }
-
-  test("the pin actually catches a de-optimized plan (extra repartition = extra exchange)") {
-    val pinned = PinnedShuffles("q01_pricing_summary")
-    val deoptimized = collectPlans(
-      SparkEntry.queries("q01_pricing_summary")(spark, sf)
-        .repartition(64) // the accidental-extra-shuffle a refactor could add
-        .queryExecution.executedPlan)
-      .count(_.isInstanceOf[ShuffleExchangeExec])
-    assert(deoptimized > pinned,
-      "an extra repartition must register as shuffle-count drift")
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite, built with the production confs
-  * ([[GraftSession]]) at the width PlanStats pins plans on. */
+  * ([[GraftSession]]) at the width `Probe plan` pins plans on. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("4").appName("graft-test").getOrCreate()
 
