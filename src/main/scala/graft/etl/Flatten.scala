@@ -72,43 +72,13 @@ object Flatten {
   /** C1+C2 (fast path): flatten block->transactions with positional index,
     * zip-joined with receipts by array position — the exact semantics of
     * `receipts[transaction_index]` (main.rs:209-254). */
-  private def transactionRowsOf(withReceipts: DataFrame): DataFrame = {
-    val exploded = withReceipts.select(
+  private def transactionRowsOf(withReceipts: DataFrame): DataFrame =
+    withReceipts.select(
       col("number"),
       col("hash").as("_blockHash"),
       col("timestamp").as("_blockTimestamp"),
       posexplode(arrays_zip(col("transactions"), col("receipts"))).as(Seq("_txIdx", "_z")))
-    val tx = col("_z.transactions")
-    val rc = col("_z.receipts")
-    exploded.select(
-      tx.getField("hash").as("hash"),
-      col("_blockHash").as("blockHash"),
-      col("number").as("blockNumber"),
-      col("_blockTimestamp").cast(D).as("blockTimestamp"),
-      col("_txIdx").cast("long").as("transactionIndex"),
-      tx.getField("chainId").cast(D).as("chainId"),
-      tx.getField("txType").as("type"),
-      tx.getField("from").as("from"),
-      tx.getField("to").as("to"),
-      tx.getField("value").as("value"),
-      tx.getField("nonce").cast(D).as("nonce"),
-      tx.getField("input").as("input"),
-      tx.getField("gas").cast(D).as("gas"),
-      tx.getField("gasPrice").cast(D).as("gasPrice"),
-      tx.getField("maxFeePerGas").cast(D).as("maxFeePerGas"),
-      tx.getField("maxPriorityFeePerGas").cast(D).as("maxPriorityFeePerGas"),
-      tx.getField("r").as("r"),
-      tx.getField("s").as("s"),
-      tx.getField("v").as("v"),
-      tx.getField("accessList").as("accessList"),
-      rc.getField("contractAddress").as("contractAddress"),
-      rc.getField("cumulativeGasUsed").cast(D).as("cumulativeGasUsed"),
-      rc.getField("effectiveGasPrice").cast(D).as("effectiveGasPrice"),
-      rc.getField("gasUsed").cast(D).as("gasUsed"),
-      rc.getField("logsBloom").as("logsBloom"),
-      rc.getField("root").as("root"),
-      rc.getField("status").as("status"))
-  }
+      .select(txRow(col("_z.transactions"), col("_z.receipts")): _*)
 
   /** C2 (defensive path): explode txs and receipts separately, then
     * equi-join on (blockNumber, transactionIndex). Correct even if the
@@ -122,39 +92,42 @@ object Flatten {
     val rcs = receipts.select(
       col("blockNumber"), explode(col("receipts")).as("_rc"))
       .select(col("blockNumber"), col("_rc.transactionIndex").as("_rcIdx"), col("_rc"))
-    val tx = col("_tx")
-    val rc = col("_rc")
     txs.join(rcs,
         txs("number") === rcs("blockNumber") && txs("_txIdx").cast("long") === rcs("_rcIdx"))
-      .select(
-        tx.getField("hash").as("hash"),
-        col("_blockHash").as("blockHash"),
-        col("number").as("blockNumber"),
-        col("_blockTimestamp").cast(D).as("blockTimestamp"),
-        col("_txIdx").cast("long").as("transactionIndex"),
-        tx.getField("chainId").cast(D).as("chainId"),
-        tx.getField("txType").as("type"),
-        tx.getField("from").as("from"),
-        tx.getField("to").as("to"),
-        tx.getField("value").as("value"),
-        tx.getField("nonce").cast(D).as("nonce"),
-        tx.getField("input").as("input"),
-        tx.getField("gas").cast(D).as("gas"),
-        tx.getField("gasPrice").cast(D).as("gasPrice"),
-        tx.getField("maxFeePerGas").cast(D).as("maxFeePerGas"),
-        tx.getField("maxPriorityFeePerGas").cast(D).as("maxPriorityFeePerGas"),
-        tx.getField("r").as("r"),
-        tx.getField("s").as("s"),
-        tx.getField("v").as("v"),
-        tx.getField("accessList").as("accessList"),
-        rc.getField("contractAddress").as("contractAddress"),
-        rc.getField("cumulativeGasUsed").cast(D).as("cumulativeGasUsed"),
-        rc.getField("effectiveGasPrice").cast(D).as("effectiveGasPrice"),
-        rc.getField("gasUsed").cast(D).as("gasUsed"),
-        rc.getField("logsBloom").as("logsBloom"),
-        rc.getField("root").as("root"),
-        rc.getField("status").as("status"))
+      .select(txRow(col("_tx"), col("_rc")): _*)
   }
+
+  /** The transactions row (C2, main.rs:209-254) of one transaction `tx`
+    * and its receipt `rc`, beside the block's `number`, `_blockHash`,
+    * `_blockTimestamp` and the transaction's `_txIdx`. */
+  private def txRow(tx: Column, rc: Column): Seq[Column] = Seq(
+    tx.getField("hash").as("hash"),
+    col("_blockHash").as("blockHash"),
+    col("number").as("blockNumber"),
+    col("_blockTimestamp").cast(D).as("blockTimestamp"),
+    col("_txIdx").cast("long").as("transactionIndex"),
+    tx.getField("chainId").cast(D).as("chainId"),
+    tx.getField("txType").as("type"),
+    tx.getField("from").as("from"),
+    tx.getField("to").as("to"),
+    tx.getField("value").as("value"),
+    tx.getField("nonce").cast(D).as("nonce"),
+    tx.getField("input").as("input"),
+    tx.getField("gas").cast(D).as("gas"),
+    tx.getField("gasPrice").cast(D).as("gasPrice"),
+    tx.getField("maxFeePerGas").cast(D).as("maxFeePerGas"),
+    tx.getField("maxPriorityFeePerGas").cast(D).as("maxPriorityFeePerGas"),
+    tx.getField("r").as("r"),
+    tx.getField("s").as("s"),
+    tx.getField("v").as("v"),
+    tx.getField("accessList").as("accessList"),
+    rc.getField("contractAddress").as("contractAddress"),
+    rc.getField("cumulativeGasUsed").cast(D).as("cumulativeGasUsed"),
+    rc.getField("effectiveGasPrice").cast(D).as("effectiveGasPrice"),
+    rc.getField("gasUsed").cast(D).as("gasUsed"),
+    rc.getField("logsBloom").as("logsBloom"),
+    rc.getField("root").as("root"),
+    rc.getField("status").as("status"))
 
   /** C3 over the one-read scan ([[eventRowsOf]]). */
   def eventRows(read: Dataset[BlockWithReceipts]): DataFrame =

@@ -215,10 +215,7 @@ object AggStateMv {
           "ELSE est_raw_milli END"))
   }
 
-  val Cutoff = "1997-06-01"
-
   def aggStateRefresh(s: SparkSession, dir: String): DataFrame = {
-    val mvPath = graft.etl.Scratch.path(s, "mv/uniq_state_refresh")
     val orders = s.read.parquet(s"$dir/orders.parquet")
     // ONE corpus pass (r15): the cutoff is the first of a month, so the
     // date predicate and the o_month predicate select the same rows —
@@ -227,23 +224,12 @@ object AggStateMv {
     // the boundary). Before r15 the pre side and the delta side each
     // re-ran the full scan + the state aggregation chain (guide §1.2).
     val all = Lineage.truncate(states(orders))
-    // 1. the pre-existing MV: pre-cutoff states, month-partitioned
-    IncrementalMv.writePartitioned(
+    // base: the pre-cutoff states; delta: the batch's, a filter over the
+    // same one-pass states table, merged by the -Merge combinator. The
+    // refreshed per-month state summary is the query result.
+    withEstimate(IncrementalMv.refresh(s, "uniq_state_refresh", "o_month",
       all.filter(col("o_month") < lit(IncrementalMv.CutoffMonth)),
-      "o_month", mvPath)
-    // 2. the delta batch's states — a filter over the shared one-pass
-    //    states table (the corpus work happened once in `all`)
-    val delta = all.filter(col("o_month") >= lit(IncrementalMv.CutoffMonth))
-    val touched = delta.select(col("o_month")).distinct()
-    // 3. merge stored + delta for the touched months only; rewrite
-    //    exactly those partitions (untouched history is never read)
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("o_month"), "left_semi")
-    IncrementalMv.writePartitioned(
-      Lineage.truncate(mergeStateRows(stored.unionByName(delta))),
-      "o_month", mvPath, dynamic = true)
-    // 4. the refreshed per-month state summary is the query result
-    withEstimate(s.read.parquet(mvPath))
+      all.filter(col("o_month") >= lit(IncrementalMv.CutoffMonth)))(mergeStateRows))
       .select(col("o_month").cast("long").as("o_month"), col("grp"),
         col("n_rows"), col("price_cents"), col("n_hit"), col("n_zero"),
         col("s_scaled"), col("est_milli"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of an aggregate materialized view — the
@@ -68,10 +68,42 @@ object IncrementalMv {
       .partitionBy(partCol).parquet(path)
   }
 
-  private def partials(fact: DataFrame): DataFrame =
+  /** A fact row's ship month as a `yyyymm` int: the partition key of
+    * the month-keyed MVs. */
+  private[graft] val shipMonth: Column =
+    (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int")
+
+  /** The partition refresh every MV here shares. Lands `base` as the
+    * stored MV `mv/<name>` under [[graft.etl.Scratch]], partitioned by
+    * `partCol`; merges `delta` with the stored rows of the partitions it
+    * touches (a semi-join on the delta's keys, so untouched history is
+    * never read); rewrites exactly those partitions by dynamic overwrite;
+    * and returns the refreshed MV read back. `merge` folds stored and
+    * delta rows sharing a key into one row of the MV's schema. The merge
+    * reads the path it overwrites, so it is truncated first: the
+    * overwrite never scans its own output. At 100 TB `base` already
+    * exists; landing it here keeps the diagnostics self-contained and
+    * idempotent. */
+  private[graft] def refresh(s: SparkSession, name: String, partCol: String,
+      base: DataFrame, delta: DataFrame)(merge: DataFrame => DataFrame): DataFrame = {
+    val mvPath = graft.etl.Scratch.path(s, s"mv/$name")
+    writePartitioned(base, partCol, mvPath)
+    val touched = delta.select(col(partCol)).distinct()
+    val stored = s.read.parquet(mvPath).join(touched, Seq(partCol), "left_semi")
+    writePartitioned(Lineage.truncate(merge(stored.unionByName(delta))),
+      partCol, mvPath, dynamic = true)
+    s.read.parquet(mvPath)
+  }
+
+  /** The merge of distributive partials: each measure summed per key. */
+  private[graft] def sums(keys: String*)(measures: String*): DataFrame => DataFrame = {
+    val aggs = measures.map(m => sum(col(m)).as(m))
+    _.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  private[graft] def partials(fact: DataFrame): DataFrame =
     fact
-      .withColumn("ship_month",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int"))
+      .withColumn("ship_month", shipMonth)
       .groupBy(col("ship_month"), col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_quantity").cast("decimal(18,2)") * 100).cast("long").as("qty_cents"),
@@ -79,7 +111,6 @@ object IncrementalMv {
           .as("price_cents"))
 
   def incrementalRefresh(s: SparkSession, dir: String): DataFrame = {
-    val mvPath = graft.etl.Scratch.path(s, "mv/revenue_by_month_flag")
     val fact = s.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_shipdate"), col("l_returnflag"), col("l_quantity"),
         col("l_extendedprice"))
@@ -91,32 +122,12 @@ object IncrementalMv {
     // pre side and the delta side each paid the full fact scan +
     // shuffle.
     val all = Lineage.truncate(partials(fact))
-    // 1. the pre-existing MV: partials of the pre-cutoff history,
-    //    partitioned by month (at 100 TB this already exists; building
-    //    it here makes the diagnostic self-contained and idempotent)
-    writePartitioned(all.filter(col("ship_month") < lit(CutoffMonth)),
-      "ship_month", mvPath)
-    // 2. the incoming batch's partials — a filter over the shared
-    //    one-pass partials table (the corpus work happened once in
-    //    `all`); months it touches are the only MV state revisited
-    val delta = all.filter(col("ship_month") >= lit(CutoffMonth))
-    val touched = delta.select(col("ship_month")).distinct()
-    // 3. merge stored + delta partials for the touched months only and
-    //    rewrite exactly those partitions (dynamic overwrite leaves
-    //    untouched months' files alone)
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("ship_month"), "left_semi")
-    // materialize the merge before writing: the refreshed partials READ
-    // mvPath and WRITE mvPath — truncation stages the (touched-months-
-    // sized) result so the overwrite never scans its own output path
-    writePartitioned(Lineage.truncate(stored.unionByName(delta)
-      .groupBy(col("ship_month"), col("l_returnflag"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("qty_cents")).as("qty_cents"),
-        sum(col("price_cents")).as("price_cents"))),
-      "ship_month", mvPath, dynamic = true)
-    // 4. the refreshed MV is the query result
-    s.read.parquet(mvPath)
+    // base: the pre-cutoff history's partials; delta: the incoming
+    // batch's, a filter over the same one-pass table
+    refresh(s, "revenue_by_month_flag", "ship_month",
+      all.filter(col("ship_month") < lit(CutoffMonth)),
+      all.filter(col("ship_month") >= lit(CutoffMonth)))(
+      sums("ship_month", "l_returnflag")("n_rows", "qty_cents", "price_cents"))
       .select(col("ship_month").cast("long").as("ship_month"),
         col("l_returnflag"), col("n_rows"), col("qty_cents"), col("price_cents"))
       .orderBy(col("ship_month"), col("l_returnflag"))
@@ -137,15 +148,13 @@ object IncrementalMv {
   // the hash match is the join-delta algebra theorem checked per run.
   private def joinPartials(orders: DataFrame, line: DataFrame): DataFrame =
     line.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .withColumn("ship_month",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int"))
+      .withColumn("ship_month", shipMonth)
       .groupBy(col("ship_month"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
           .as("price_cents"))
 
   def joinRefresh(s: SparkSession, dir: String): DataFrame = {
-    val mvPath = graft.etl.Scratch.path(s, "mv/join_revenue_by_month_priority")
     val orders = s.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
     val line = s.read.parquet(s"$dir/lineitem.parquet")
@@ -160,31 +169,21 @@ object IncrementalMv {
     val oNew = Lineage.truncate(orders.filter(col("o_orderdate") >= lit(Cutoff)))
     val lOld = line.filter(col("l_shipdate") < lit(Cutoff))
     val lNew = Lineage.truncate(line.filter(col("l_shipdate") >= lit(Cutoff)))
-    // 1. the pre-existing MV: old⋈old partials (exists at 100 TB)
-    writePartitioned(joinPartials(oOld, lOld), "ship_month", mvPath)
-    // 2. the three delta terms; old sides semi-join-restricted to the
-    //    delta's keys so no term rescans unmatched history
+    // the three delta terms; old sides semi-join-restricted to the
+    // delta's keys so no term rescans unmatched history
     val oTouched = oOld.join(
       lNew.select(col("l_orderkey").as("o_orderkey")).distinct(),
       Seq("o_orderkey"), "left_semi")
     val lTouched = lOld.join(
       oNew.select(col("o_orderkey").as("l_orderkey")).distinct(),
       Seq("l_orderkey"), "left_semi")
-    val delta = joinPartials(oTouched, lNew)
+    val merge = sums("ship_month", "o_orderpriority")("n_rows", "price_cents")
+    val delta = merge(joinPartials(oTouched, lNew)
       .unionByName(joinPartials(oNew, lTouched))
-      .unionByName(joinPartials(oNew, lNew))
-      .groupBy(col("ship_month"), col("o_orderpriority"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("price_cents")).as("price_cents"))
-    val touched = delta.select(col("ship_month")).distinct()
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("ship_month"), "left_semi")
-    writePartitioned(Lineage.truncate(stored.unionByName(delta)
-      .groupBy(col("ship_month"), col("o_orderpriority"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("price_cents")).as("price_cents"))),
-      "ship_month", mvPath, dynamic = true)
-    s.read.parquet(mvPath)
+      .unionByName(joinPartials(oNew, lNew)))
+    // base: the old⋈old partials
+    refresh(s, "join_revenue_by_month_priority", "ship_month",
+      joinPartials(oOld, lOld), delta)(merge)
       .select(col("ship_month").cast("long").as("ship_month"),
         col("o_orderpriority"), col("n_rows"), col("price_cents"))
       .orderBy(col("ship_month"), col("o_orderpriority"))
@@ -232,19 +231,13 @@ object IncrementalMv {
   val TopKSuppliers = 10
   val TopKBuckets = 16
 
-  private def suppPartials(fact: DataFrame): DataFrame =
-    fact.groupBy(col("l_suppkey"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("price_cents"))
-      .withColumn("bucket", pmod(col("l_suppkey"), lit(TopKBuckets)).cast("int"))
-
   /** Per-(supplier, side) partials in ONE corpus pass — the key is NOT
     * month-aligned with the cutoff, so the side marker joins the group
-    * key; each side's slice then equals suppPartials(that side's rows)
-    * exactly (same groups, same aggregates over the same rows). Before
-    * r15 both sides re-ran the full fact scan + shuffle (guide §1.2). */
-  private def suppPartialsBySide(fact: DataFrame, side: org.apache.spark.sql.Column): DataFrame =
+    * key; each side's slice then equals the per-supplier partials of that
+    * side's rows exactly (same groups, same aggregates over the same
+    * rows). Before r15 both sides re-ran the full fact scan + shuffle
+    * (guide §1.2). */
+  private def suppPartialsBySide(fact: DataFrame, side: Column): DataFrame =
     fact.withColumn("_side", side)
       .groupBy(col("l_suppkey"), col("_side"))
       .agg(count(lit(1)).as("n_rows"),
@@ -252,29 +245,10 @@ object IncrementalMv {
           .as("price_cents"))
       .withColumn("bucket", pmod(col("l_suppkey"), lit(TopKBuckets)).cast("int"))
 
-  def topkMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Windows
-    val mvPath = graft.etl.Scratch.path(s, "mv/supplier_revenue_buckets")
-    val fact = s.read.parquet(s"$dir/lineitem.parquet")
-      .select(col("l_suppkey"), col("l_shipdate"), col("l_extendedprice"))
-    val cells = Lineage.truncate(
-      suppPartialsBySide(fact, col("l_shipdate") < lit(Cutoff)))
-    // 1. the pre-existing per-key state (exists at 100 TB)
-    writePartitioned(cells.filter(col("_side")).drop("_side"), "bucket", mvPath)
-    // 2. the delta's per-key partials; its buckets are the only state
-    //    revisited
-    val delta = cells.filter(!col("_side")).drop("_side")
-    val touched = delta.select(col("bucket")).distinct()
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("bucket"), "left_semi")
-    writePartitioned(Lineage.truncate(stored.unionByName(delta)
-      .groupBy(col("bucket"), col("l_suppkey"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("price_cents")).as("price_cents"))),
-      "bucket", mvPath, dynamic = true)
-    // 3. the served top-k: a TakeOrdered over the key-domain-sized
-    //    aggregate table, ranked after the limit (k rows)
-    s.read.parquet(mvPath)
+  /** The served top-k: a TakeOrdered over the key-domain-sized per-key
+    * state, ranked after the limit (k rows). */
+  private def topK(state: DataFrame): DataFrame =
+    state
       .select(col("l_suppkey"), col("n_rows"), col("price_cents"))
       .orderBy(col("price_cents").desc, col("l_suppkey"))
       .limit(TopKSuppliers)
@@ -283,6 +257,18 @@ object IncrementalMv {
       .select(col("rank").cast("long").as("rank"), col("l_suppkey"),
         col("n_rows"), col("price_cents"))
       .orderBy(col("rank"))
+
+  def topkMaintain(s: SparkSession, dir: String): DataFrame = {
+    val fact = s.read.parquet(s"$dir/lineitem.parquet")
+      .select(col("l_suppkey"), col("l_shipdate"), col("l_extendedprice"))
+    val cells = Lineage.truncate(
+      suppPartialsBySide(fact, col("l_shipdate") < lit(Cutoff)))
+    // base: the pre-cutoff per-key state; delta: the post-cutoff
+    // partials, whose buckets are the only state revisited
+    topK(refresh(s, "supplier_revenue_buckets", "bucket",
+      cells.filter(col("_side")).drop("_side"),
+      cells.filter(!col("_side")).drop("_side"))(
+      sums("bucket", "l_suppkey")("n_rows", "price_cents")))
   }
 
   /** Oracle: the one-shot full recompute's top-k. */
@@ -312,40 +298,33 @@ object IncrementalMv {
   //
   // The DuckDB oracle is the one-shot full COUNT(DISTINCT) recompute,
   // so the hash match is the support-table theorem checked per run.
-  def distinctMaintain(s: SparkSession, dir: String): DataFrame = {
-    val mvPath = graft.etl.Scratch.path(s, "mv/distinct_supp_by_month")
-    val fact = s.read.parquet(s"$dir/lineitem.parquet")
-      .select(col("l_shipdate"), col("l_suppkey"))
-    def support(f: DataFrame): DataFrame = f
-      .withColumn("ship_month",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int"))
-      .groupBy(col("ship_month"), col("l_suppkey"))
-      .agg(count(lit(1)).as("m"))
-    // ONE corpus pass; pre/delta split by month afterwards — exact
-    // because the boundary is month-aligned (see [[CutoffMonth]])
-    val all = Lineage.truncate(support(fact))
-    // 1. pre-existing support state (history multiplicities)
-    writePartitioned(all.filter(col("ship_month") < lit(CutoffMonth)),
-      "ship_month", mvPath)
-    // 2. delta multiplicities; only their months are revisited
-    val delta = all.filter(col("ship_month") >= lit(CutoffMonth))
-    val touched = delta.select(col("ship_month")).distinct()
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("ship_month"), "left_semi")
-    writePartitioned(Lineage.truncate(stored.unionByName(delta)
-      .groupBy(col("ship_month"), col("l_suppkey"))
-      .agg(sum(col("m")).as("m"))),
-      "ship_month", mvPath, dynamic = true)
-    // 3. serve: liveness filter (m > 0 — trivially true for this
-    //    insert-only diagnostic, load-bearing once deletes decrement)
-    //    then a key-domain-sized count per group
-    s.read.parquet(mvPath)
+
+  /** Serve a support table: the liveness filter (m > 0 — trivially true
+    * for an insert-only refresh, load-bearing once deletes decrement),
+    * then a key-domain-sized count per month. */
+  private def distinctCounts(support: DataFrame): DataFrame =
+    support
       .filter(col("m") > 0)
       .groupBy(col("ship_month"))
       .agg(count(lit(1)).as("n_distinct_supp"), sum(col("m")).as("n_rows"))
       .select(col("ship_month").cast("long").as("ship_month"),
         col("n_distinct_supp"), col("n_rows"))
       .orderBy(col("ship_month"))
+
+  def distinctMaintain(s: SparkSession, dir: String): DataFrame = {
+    val fact = s.read.parquet(s"$dir/lineitem.parquet")
+      .select(col("l_shipdate"), col("l_suppkey"))
+    // ONE corpus pass; pre/delta split by month afterwards — exact
+    // because the boundary is month-aligned (see [[CutoffMonth]])
+    val all = Lineage.truncate(fact
+      .withColumn("ship_month", shipMonth)
+      .groupBy(col("ship_month"), col("l_suppkey"))
+      .agg(count(lit(1)).as("m")))
+    // base: history multiplicities; delta: the batch's
+    distinctCounts(refresh(s, "distinct_supp_by_month", "ship_month",
+      all.filter(col("ship_month") < lit(CutoffMonth)),
+      all.filter(col("ship_month") >= lit(CutoffMonth)))(
+      sums("ship_month", "l_suppkey")("m")))
   }
 
   /** Oracle: the one-shot full recompute. */
@@ -380,8 +359,6 @@ object IncrementalMv {
     * drops them before the serve. Oracle: one-shot top-k recompute over
     * the undeleted rows. */
   def topkDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Windows
-    val mvPath = graft.etl.Scratch.path(s, "mv/supplier_revenue_deletes")
     val fact = s.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_suppkey"), col("l_returnflag"), col("l_extendedprice"))
     // ONE corpus pass keyed by (supplier, returned?): the full state is
@@ -390,36 +367,16 @@ object IncrementalMv {
     // before r15 the full pass and the R pass each scanned the fact
     val cells = Lineage.truncate(
       suppPartialsBySide(fact, col("l_returnflag") === "R"))
-    // 1. full insert-phase state (every row, returns included)
-    writePartitioned(cells
-      .groupBy(col("bucket"), col("l_suppkey"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("price_cents")).as("price_cents"))
-      .select(col("l_suppkey"), col("n_rows"), col("price_cents"), col("bucket")),
-      "bucket", mvPath)
-    // 2. DELETE delta: returned rows as negative partials
-    val delta = cells.filter(col("_side")).drop("_side")
-      .withColumn("n_rows", -col("n_rows"))
-      .withColumn("price_cents", -col("price_cents"))
-    val touched = delta.select(col("bucket")).distinct()
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("bucket"), "left_semi")
-    writePartitioned(Lineage.truncate(stored.unionByName(delta)
-      .groupBy(col("bucket"), col("l_suppkey"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("price_cents")).as("price_cents"))),
-      "bucket", mvPath, dynamic = true)
-    // 3. serve: liveness filter, then TakeOrdered over the support table
-    s.read.parquet(mvPath)
-      .filter(col("n_rows") > 0)
-      .select(col("l_suppkey"), col("n_rows"), col("price_cents"))
-      .orderBy(col("price_cents").desc, col("l_suppkey"))
-      .limit(TopKSuppliers)
-      .withColumn("rank", row_number().over(
-        Windows.boundedGlobal(col("price_cents").desc, col("l_suppkey"))))
-      .select(col("rank").cast("long").as("rank"), col("l_suppkey"),
-        col("n_rows"), col("price_cents"))
-      .orderBy(col("rank"))
+    val merge = sums("bucket", "l_suppkey")("n_rows", "price_cents")
+    // base: the full insert-phase state (every row, returns included);
+    // delta: the DELETE, returned rows as negative partials. Serve: the
+    // liveness filter, then the top-k.
+    topK(refresh(s, "supplier_revenue_deletes", "bucket",
+      merge(cells).select(col("l_suppkey"), col("n_rows"), col("price_cents"), col("bucket")),
+      cells.filter(col("_side")).drop("_side")
+        .withColumn("n_rows", -col("n_rows"))
+        .withColumn("price_cents", -col("price_cents")))(merge)
+      .filter(col("n_rows") > 0))
   }
 
   val topkDeleteSql: String =
@@ -435,7 +392,6 @@ object IncrementalMv {
        |LIMIT $TopKSuppliers""".stripMargin
 
   def deleteRetraction(s: SparkSession, dir: String): DataFrame = {
-    val mvPath = graft.etl.Scratch.path(s, "mv/retract_supp_by_month")
     val fact = s.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_shipdate"), col("l_suppkey"), col("l_returnflag"))
     // ONE corpus pass keyed by (month, supplier, returned?): the full
@@ -444,35 +400,17 @@ object IncrementalMv {
     // negated — before r15 the full pass and the R pass each scanned
     // the fact (guide §1.2)
     val cells = Lineage.truncate(fact
-      .withColumn("ship_month",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int"))
+      .withColumn("ship_month", shipMonth)
       .withColumn("_r", col("l_returnflag") === "R")
       .groupBy(col("ship_month"), col("l_suppkey"), col("_r"))
       .agg(count(lit(1)).as("m")))
-    // 1. full insert-phase state (every row, returns included)
-    writePartitioned(cells
-      .groupBy(col("ship_month"), col("l_suppkey"))
-      .agg(sum(col("m")).as("m")),
-      "ship_month", mvPath)
-    // 2. DELETE delta: returned rows as negative multiplicities
-    val delta = cells.filter(col("_r")).drop("_r")
-      .withColumn("m", -col("m"))
-    val touched = delta.select(col("ship_month")).distinct()
-    val stored = s.read.parquet(mvPath)
-      .join(touched, Seq("ship_month"), "left_semi")
-    writePartitioned(Lineage.truncate(stored.unionByName(delta)
-      .groupBy(col("ship_month"), col("l_suppkey"))
-      .agg(sum(col("m")).as("m"))),
-      "ship_month", mvPath, dynamic = true)
-    // 3. serve: the liveness filter is now LOAD-BEARING — fully-returned
-    //    (month, supplier) pairs sit at m = 0 and must not count
-    s.read.parquet(mvPath)
-      .filter(col("m") > 0)
-      .groupBy(col("ship_month"))
-      .agg(count(lit(1)).as("n_distinct_supp"), sum(col("m")).as("n_rows"))
-      .select(col("ship_month").cast("long").as("ship_month"),
-        col("n_distinct_supp"), col("n_rows"))
-      .orderBy(col("ship_month"))
+    val merge = sums("ship_month", "l_suppkey")("m")
+    // base: the full insert-phase multiplicities (returns included);
+    // delta: the DELETE, returned rows as negative multiplicities. The
+    // served liveness filter is now LOAD-BEARING: fully-returned (month,
+    // supplier) pairs sit at m = 0 and must not count.
+    distinctCounts(refresh(s, "retract_supp_by_month", "ship_month", merge(cells),
+      cells.filter(col("_r")).drop("_r").withColumn("m", -col("m")))(merge))
   }
 
   /** Oracle: one-shot recompute over the undeleted rows. */

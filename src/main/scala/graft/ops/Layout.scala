@@ -354,16 +354,10 @@ object Layout {
     // Cluster the write by the partition column (guide §6): without it
     // every scan task writes a file into EVERY month dir (tasks × ~80
     // partitions of tiny files — measured 3.2 s of layout_dpp's 4.0 s);
-    // clustered, each month is written by exactly one task (one file per
-    // partition, tasks spread across the cluster). The explicit
-    // numPartitions (the session's shuffle parallelism, driver-sized via
-    // SPARK_GRAFT_CPUS) keeps AQE from coalescing the tiny fixture back
-    // to one sequential writer task.
-    s.read.parquet(s"$dir/lineitem.parquet")
-      .withColumn("ship_month",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int"))
-      .repartition(s.sessionState.conf.numShufflePartitions, col("ship_month"))
-      .write.mode("overwrite").partitionBy("ship_month").parquet(path)
+    // clustered, each month is written by exactly one task (see
+    // IncrementalMv.writePartitioned).
+    IncrementalMv.writePartitioned(s.read.parquet(s"$dir/lineitem.parquet")
+      .withColumn("ship_month", IncrementalMv.shipMonth), "ship_month", path)
     val fact = s.read.parquet(path)
     val D = "decimal(18,2)"
     val out = fact

@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
@@ -31,6 +31,7 @@ private[graft] final class SharedTables[T](build: (SparkSession, String) => T) {
       rddIds: Set[Int], buildSec: Double)
 
   private val entries = new ConcurrentHashMap[(SparkSession, String), Entry]()
+  SharedTables.families.add(this)
 
   def apply(s: SparkSession, dir: String): T = {
     // entries of stopped sessions would pin their frames forever
@@ -60,6 +61,10 @@ private[graft] final class SharedTables[T](build: (SparkSession, String) => T) {
   def buildSeconds(s: SparkSession): Map[String, Double] =
     of(s).map(e => e.dir -> e.buildSec).toMap
 
+  /** Forgets this session's entries and unpersists their blocks. */
+  def drop(s: SparkSession): Unit =
+    of(s).toList.foreach { e => entries.remove((e.session, e.dir)); release(e) }
+
   private def of(s: SparkSession): Iterable[Entry] =
     entries.values.asScala.filter(_.session eq s)
 
@@ -74,9 +79,16 @@ private[graft] final class SharedTables[T](build: (SparkSession, String) => T) {
 
 private[graft] object SharedTables {
 
+  private val families = new ConcurrentLinkedQueue[SharedTables[_]]()
+
   /** RDD ids of every family's shared tables on this session's context. */
   def protectedIds(s: SparkSession): Set[Int] =
-    GraphOps.protectedRddIds(s) ++ DedupOps.protectedRddIds(s)
+    families.asScala.flatMap(_.rddIds(s)).toSet
+
+  /** Drops this session's entries from every family and unpersists their
+    * blocks: a `newSession()` shares the live context, so the stopped-
+    * context prune never reaches its entries. */
+  def drop(s: SparkSession): Unit = families.asScala.foreach(_.drop(s))
 
   /** Unpersists every RDD persisted on this session's context except
     * `keep` and the shared tables. */

@@ -238,7 +238,11 @@ object SimilarityOps {
   def sqCodes(emb: DataFrame): DataFrame = sqCodes(emb, sqMinMax(emb))
 
   def sqTopK(emb: DataFrame, nProbes: Int = ProbeIds, k: Int = TopK): DataFrame = {
-    val mm = sqMinMax(emb).localCheckpoint() // one corpus pass, reused 3×
+    // one corpus pass, reused 3×: the codebook row is collected here and
+    // served as a local 1-row frame, so nothing stays persisted after the
+    // caller's action
+    val mm0 = sqMinMax(emb)
+    val mm = emb.sparkSession.createDataFrame(java.util.List.of(mm0.head()), mm0.schema)
     val codes = sqCodes(emb, mm)
     val probes = emb.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

@@ -14,6 +14,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.{Bench, GraftSession, SparkEntry}
+import graft.ops.SharedTables
 
 /** The per-query probe: times, A/Bs, profiles, counts or prints the plans
   * of registered queries on the fixture at `SPARK_GRAFT_SF_DIR` (default
@@ -70,12 +71,7 @@ object Probe {
       case "time" :: reps :: ns if ns.nonEmpty =>
         val qs = named(ns); s => time(s, sfDir, reps.toInt, qs)
       case "ab" :: reps :: key :: value :: ns if ns.nonEmpty =>
-        val qs = named(ns)
-        s => {
-          val alt = s.newSession()
-          alt.conf.set(key, value)
-          ab(Seq("default" -> s, "set" -> alt), sfDir, reps.toInt, qs)
-        }
+        val qs = named(ns); s => ab(s, key -> value, sfDir, reps.toInt, qs)
       case "jobs" :: ns if ns.nonEmpty =>
         val qs = named(ns); s => jobs(s, sfDir, qs)
       case "plan" :: ns =>
@@ -118,13 +114,20 @@ object Probe {
     samples
   }
 
-  /** Best-of-`reps` per name under each arm's session. */
-  def ab(arms: Seq[(String, SparkSession)], sfDir: String, reps: Int,
+  /** Best-of-`reps` per name under `spark` and under a `newSession()`
+    * with `conf` set; the new session's shared tables are dropped when
+    * done, whatever happened. */
+  def ab(spark: SparkSession, conf: (String, String), sfDir: String, reps: Int,
       queries: Seq[(String, Query)]): Unit = {
-    for ((_, fn) <- queries; (_, s) <- arms) Bench.rep(s, sfDir, fn)
-    val samples = passes(arms, sfDir, reps, queries).groupMap(r => (r._1, r._2))(_._3._2)
-    for ((n, _) <- queries; (tag, _) <- arms; ts <- samples.get((n, tag)))
-      println(f"[ab] $n%-28s $tag%-7s best=${ts.min}%6.2f all=${ts.map(t => f"$t%.2f").mkString(",")}")
+    val alt = spark.newSession()
+    alt.conf.set(conf._1, conf._2)
+    val arms = Seq("default" -> spark, "set" -> alt)
+    try {
+      for ((_, fn) <- queries; (_, s) <- arms) Bench.rep(s, sfDir, fn)
+      val samples = passes(arms, sfDir, reps, queries).groupMap(r => (r._1, r._2))(_._3._2)
+      for ((n, _) <- queries; (tag, _) <- arms; ts <- samples.get((n, tag)))
+        println(f"[ab] $n%-28s $tag%-7s best=${ts.min}%6.2f all=${ts.map(t => f"$t%.2f").mkString(",")}")
+    } finally SharedTables.drop(alt)
   }
 
   /** `reps` passes over every name and, per name, every arm, so load

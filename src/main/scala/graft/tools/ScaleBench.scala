@@ -575,9 +575,10 @@ object ScaleBench {
     *    vertex-disjoint membership replicas; each arm's projection is
     *    built untimed in its own session, so both arms time the kernel.
     *  - `mv_partials`: the single-corpus-pass mv refresh algebra vs the
-    *    two-pass shape it replaced (both inline: the registered operator
-    *    has only the one-pass form), over a fact replicated with dates
-    *    unchanged — corpus growth at fixed state width.
+    *    two-pass shape it replaced (both over [[IncrementalMv.partials]]:
+    *    the registered operator has only the one-pass form), over a fact
+    *    replicated with dates unchanged — corpus growth at fixed state
+    *    width.
     *  - `clustered_write`: partitionBy write without vs with the
     *    cluster-by-partition-column repartition. */
   val r16: Family = Family("r16", Seq(1, 10), reps = 2) { c =>
@@ -589,14 +590,7 @@ object ScaleBench {
     val (on, offT) = (projection(spark), projection(off))
     val fact = replicate(c.read("lineitem").select(col("l_shipdate"), col("l_returnflag"),
       col("l_quantity"), col("l_extendedprice")), c.factor, Nil, 0L)
-    def shipMonth = (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int")
-    def partials(f: DataFrame): DataFrame = f.withColumn("ship_month", shipMonth)
-      .groupBy(col("ship_month"), col("l_returnflag"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("l_quantity").cast("decimal(18,2)") * 100).cast("long").as("qty_cents"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long").as("price_cents"))
-    val cutoffM = IncrementalMv.CutoffMonth
-    val cutoffD = "1997-06-01"
+    import IncrementalMv.{partials, shipMonth, Cutoff, CutoffMonth}
     val written = c.input(replicate(c.read("lineitem").select(col("l_shipdate"),
       col("l_returnflag"), col("l_quantity")), c.factor, Nil, 0L)
       .withColumn("ship_month", shipMonth))
@@ -610,13 +604,13 @@ object ScaleBench {
       cell("mv_partials") {
         val Seq((_, tTwo), (_, tOne)) = c.best(
           () => {
-            noop(partials(fact.filter(col("l_shipdate") < lit(cutoffD))))
-            noop(partials(fact.filter(col("l_shipdate") >= lit(cutoffD))))
+            noop(partials(fact.filter(col("l_shipdate") < lit(Cutoff))))
+            noop(partials(fact.filter(col("l_shipdate") >= lit(Cutoff))))
           },
           () => {
             val all = partials(fact).localCheckpoint()
-            noop(all.filter(col("ship_month") < lit(cutoffM)))
-            noop(all.filter(col("ship_month") >= lit(cutoffM)))
+            noop(all.filter(col("ship_month") < lit(CutoffMonth)))
+            noop(all.filter(col("ship_month") >= lit(CutoffMonth)))
           })
         Seq("rows" -> partials(fact).count(), "one_pass_s" -> tOne, "two_pass_s" -> tTwo)
       },

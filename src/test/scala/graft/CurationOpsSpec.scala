@@ -352,6 +352,42 @@ class CurationOpsSpec extends SparkSuite {
       got.map(_.toSeq).toSeq)
   }
 
+  test("MV refresh: merges the delta into the stored MV, rewriting only the partitions it touches") {
+    import spark.implicits._
+    val base = Seq((1, "a", 1L), (1, "b", 2L), (2, "a", 3L), (3, "a", 4L), (3, "b", 5L))
+      .toDF("p", "k", "v")
+    val delta = Seq((3, "a", 10L), (3, "c", 20L)).toDF("p", "k", "v")
+    val got = IncrementalMv.refresh(spark, "spec_refresh", "p", base, delta)(
+      IncrementalMv.sums("p", "k")("v"))
+    assert(got.select("p", "k", "v").as[(Int, String, Long)].collect().sorted.toSeq ==
+      Seq((1, "a", 1L), (1, "b", 2L), (2, "a", 3L), (3, "a", 14L), (3, "b", 5L), (3, "c", 20L)))
+    // a parquet file name carries its write job's UUID: partitions 1 and
+    // 2 keep the base write's files, only partition 3 was rewritten
+    val Uuid = "part-[0-9]+-([0-9a-f-]{36})".r.unanchored
+    val jobs = got.select(col("p"), input_file_name()).distinct().collect()
+      .groupMap(_.getInt(0))(r => r.getString(1) match { case Uuid(u) => u })
+      .map { case (p, us) => p -> us.toSet }
+    assert(jobs.values.forall(_.size == 1), jobs)
+    assert(jobs(1) == jobs(2) && jobs(3) != jobs(1), jobs)
+  }
+
+  test("topk delete MV: equals the one-shot top-k over the undeleted rows, ranked, idempotent") {
+    val got = IncrementalMv.topkDelete(spark, sf).collect()
+    val full = spark.read.parquet(s"$sf/lineitem.parquet")
+      .filter(col("l_returnflag") =!= "R")
+      .groupBy(col("l_suppkey"))
+      .agg(count(lit(1)).as("n_rows"),
+        sum(col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
+          .as("price_cents"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy(t => (-t._3, t._1)).take(IncrementalMv.TopKSuppliers)
+    assert(got.length == full.length)
+    assert(got.map(_.getLong(0)).toSeq == (1L to got.length.toLong), "rank must be dense from 1")
+    assert(got.map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq == full.toSeq)
+    assert(IncrementalMv.topkDelete(spark, sf).collect().map(_.toSeq).toSeq ==
+      got.map(_.toSeq).toSeq)
+  }
+
   test("agg-state MV: merged HLL states equal the direct sketch, invariant to finer state partitioning") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val got = AggStateMv.aggStateMv(spark, sf).collect()

@@ -410,6 +410,11 @@ class OpsSpec extends SparkSuite {
   test("SQ ANN: 8-bit codes preserve the exact inner-product ranking almost perfectly") {
     import org.apache.spark.sql.functions.expr
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    // the codebook is eager and local: running the operator leaves
+    // nothing persisted behind
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    SimilarityOps.sqTopK(emb).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == persisted)
     val sq = SimilarityOps.sqTopK(emb).select("q_id", "c_id")
     // exact full-precision inner-product top-k (same metric, unquantized)
     val probes = emb.filter(col("vec_id") < SimilarityOps.ProbeIds)

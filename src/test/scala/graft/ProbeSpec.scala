@@ -2,6 +2,8 @@ package graft
 
 import java.io.ByteArrayOutputStream
 
+import org.apache.spark.sql.SparkSession
+
 import graft.PlanQualitySpec.PinnedShuffles
 import graft.ops.{GraphOps, SharedTables}
 import graft.tools.Probe
@@ -38,20 +40,24 @@ class ProbeSpec extends SparkSuite {
   }
 
   test("ab: the two sessions' shared tables survive each other's releases") {
-    val alt = spark.newSession()
-    alt.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val arms = Seq("default" -> spark, "set" -> alt)
-    val queries = named("graph_triangles")
-    // each session's entry is stamped with its own measured build time: a
-    // table released by the other session's rep is rebuilt and restamped
-    def builds = Seq(spark, alt).map(GraphOps.sharedBuildSeconds(_).get(sf))
-    printed(Probe.ab(arms, sf, 1, queries))
-    val first = builds
-    assert(first.forall(_.nonEmpty), first)
-    val (_, out) = printed(Probe.ab(arms, sf, 1, queries))
-    assert(builds == first)
+    GraphOps.coTables(spark, sf) // the default session's tables exist, as in a sweep
+    SharedTables.release(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // each session's tables as every rep sees them: a table released by
+    // the other session's rep would be rebuilt as a new object
+    val seen = scala.collection.mutable.Buffer.empty[(SparkSession, AnyRef)]
+    val triangles = SparkEntry.queries("graph_triangles")
+    val q: Probe.Query = (s, d) => {
+      val df = triangles(s, d); seen += (s -> GraphOps.coTables(s, d)); df
+    }
+    val (_, out) = printed(Probe.ab(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false", sf, 2, Seq("graph_triangles" -> q)))
+    val bySession = seen.groupMap(_._1)(_._2)
+    assert(bySession.size == 2 && bySession.values.forall(_.size == 3))
+    assert(bySession.values.forall(ts => ts.forall(_ eq ts.head)))
     assert(out.contains("graph_triangles") && out.contains(" set "), out)
-    assert(leftover.isEmpty)
+    // the arm session's tables were dropped with it; the default's stay
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
 
   test("jobs: profiles one warm rep and leaves only the shared tables") {
